@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+JSON line ($SPARK_GRAFT_CPUS defaults to the cores this process may use):
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 

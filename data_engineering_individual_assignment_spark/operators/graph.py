@@ -1,7 +1,7 @@
 """Iterative graph algorithms over pair/edge relations.
 
-``pagerank`` complements the connected-components operators in
-``dedup`` (pair_clusters / star_clusters): components tell you WHICH
+``pagerank`` complements the connected-components operator
+``dedup.pair_clusters``: components tell you WHICH
 docs form a near-dup cluster; PageRank over the similarity graph ranks
 centrality WITHIN the corpus — e.g. picking the canonical
 representative of a template family, or weighting documents by how

@@ -108,37 +108,6 @@ def sample_frames_fake(
     )
 
 
-def embed_payload_fake(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    dim: int = 8,
-) -> DataFrame:
-    """Feature extraction stub: a deterministic pseudo-embedding from the
-    payload bytes (per-dimension byte sums) — the CLIP/whisper seam with
-    the same (id, array<float>) output contract the similarity operators
-    consume."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                vec = [0.0] * dim
-                for i, b in enumerate(data):
-                    vec[i % dim] += float(b)
-                norm = sum(v * v for v in vec) ** 0.5 or 1.0
-                ids.append(doc_id)
-                vecs.append([v / norm for v in vec])
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "embedding": vecs})
-
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, schema="doc_id bigint, embedding array<double>"
-    )
-
-
 # ---------------------------------------------------------------------------
 # REAL audio: RIFF/WAV PCM decode via the stdlib wave module (no external
 # codec needed) — this is the one modality the container CAN decode for
@@ -993,7 +962,8 @@ _HUFF_LUT_CACHE: dict[tuple[bytes, bytes], list[int]] = {}
 def _huff_lut(counts: list[int], symbols: list[int]) -> list[int]:
     """65536-entry decode table for a canonical JPEG huffman table:
     entry[window16] = (code_length << 8) | symbol for every 16-bit
-    window starting with that code; 0 marks an invalid prefix."""
+    window starting with that code; 0 marks an invalid prefix.  Raises
+    on an over-subscribed table (more codes of some length than fit)."""
     key = (bytes(counts), bytes(symbols))
     lut = _HUFF_LUT_CACHE.get(key)
     if lut is not None:
@@ -1003,6 +973,8 @@ def _huff_lut(counts: list[int], symbols: list[int]) -> list[int]:
     k = 0
     for length in range(1, 17):
         for _ in range(counts[length - 1]):
+            if code >= 1 << length:
+                raise ValueError("invalid DHT")
             start = code << (16 - length)
             span = 1 << (16 - length)
             lut[start : start + span] = [(length << 8) | symbols[k]] * span

@@ -1415,9 +1415,6 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared by near_dup_clusters and near_dup_clusters_star: the cluster
-# assignment is algorithm-independent (connected components are unique),
-# so both implementations must match the same transitive-closure oracle
 # WITH-clause fragment building the exact Jaccard>=0.7 pair graph --
 # shared by the cluster oracles here and the 2-core oracle in
 # plans/diagnostics.py, so the pair semantics cannot drift between them
@@ -1473,16 +1470,13 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "near_dup_clusters_star",
     sql=_CLUSTERS_ORACLE_SQL,
-    doc="near-dup CLUSTER assignment via alternating large-star/"
-    "small-star (Kiveris et al. 2014) — the billion-edge scale path: "
-    "O(log n) rounds independent of component diameter, one driver "
-    "action per round. Same transitive-closure oracle as "
-    "near_dup_clusters (components are algorithm-independent).",
+    doc="near-dup CLUSTER assignment under its older name, kept "
+    "registered so existing callers of queries() still find it. Served "
+    "by the same pair_clusters operator as near_dup_clusters, so rows, "
+    "schema and oracle are identical.",
 )
 def near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_join(d, "text", "doc_id", threshold=0.7, k=3)
-    return dedup.star_clusters(pairs).orderBy("doc_id")
+    return near_dup_clusters(spark, sf_dir)
 
 
 def _pagerank_iter_cte(i: int) -> str:
@@ -1726,8 +1720,8 @@ def top_doc_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "so the depth bound guarantees termination on the cyclic symmetric "
     "graph). The edge relation is computed by the DataFrame "
     "prefix-filter join, checkpointed, and handed to SQL as a view — "
-    "the declarative twin of the iterative pair_clusters/star_clusters "
-    "operators; both engines run the same recursion.",
+    "the declarative twin of the iterative pair_clusters operator; "
+    "both engines run the same recursion.",
 )
 def recursive_multi_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re

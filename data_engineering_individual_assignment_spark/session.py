@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
-configuration (AQE on, UTC session time zone, Arrow enabled) is what we'd
-ship to a 1000-executor cluster -- only master/memory sizing changes.
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
+process may run on); the same configuration (AQE on, UTC session time
+zone, Arrow enabled) is what we'd ship to a 1000-executor cluster -- only
+master/memory sizing changes.
 
 Scale notes (100 TB design point):
 - ``spark.sql.adaptive.enabled``: runtime coalescing of shuffle partitions
@@ -23,10 +24,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def local_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if it is a valid integer, else the number of
+    cores this process may run on."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 def get_spark(app_name: str = "dei-spark", shuffle_partitions: int | None = None) -> SparkSession:

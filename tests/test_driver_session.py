@@ -50,3 +50,18 @@ def test_query_executes_under_driver_shaped_session(hostile_spark, name):
     # touching every column (count would let Catalyst prune the
     # projection whose expression types we are trying to exercise)
     df.write.format("noop").mode("overwrite").save()
+
+
+@pytest.mark.parametrize("value", [None, "four"], ids=["unset", "invalid"])
+def test_local_cpus_defaults_to_affinity(monkeypatch, value):
+    """Without a valid SPARK_GRAFT_CPUS the local master is sized to the
+    cores this process may run on, not to a fixed count."""
+    import os
+
+    from data_engineering_individual_assignment_spark.session import local_cpus
+
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    assert local_cpus() == len(os.sched_getaffinity(0))

@@ -266,6 +266,33 @@ def test_jpeg_codec_restart_interval_roundtrip():
                 )
 
 
+def test_jpeg_over_subscribed_dht_raises():
+    """A DHT declaring more codes of some length than fit is malformed:
+    the LUT builder and the decoder must raise, not grow the table past
+    its 16-bit window.  Complete tables are still accepted."""
+    from data_engineering_individual_assignment_spark.operators.multimodal import (
+        _huff_lut,
+        decode_jpeg,
+    )
+
+    assert len(_huff_lut([2] + [0] * 15, [1, 2])) == 65536
+    with pytest.raises(ValueError, match="invalid DHT"):
+        _huff_lut([3] + [0] * 15, [1, 2, 3])
+
+    g = synth_texture_gray(7, 16)
+    planes = [g, np.full_like(g, 128.0), np.full_like(g, 100.0)]
+    payload = bytearray(encode_jpeg_planes(planes, 16, 16))
+    decode_jpeg(bytes(payload))
+    # first DHT: marker, 2-byte length, class/id byte, then 16 counts;
+    # moving every code to length 1 keeps the segment length valid
+    counts_at = payload.index(b"\xff\xc4") + 5
+    n = sum(payload[counts_at : counts_at + 16])
+    assert n > 2
+    payload[counts_at : counts_at + 16] = bytes([n] + [0] * 15)
+    with pytest.raises(ValueError, match="invalid DHT"):
+        decode_jpeg(bytes(payload))
+
+
 def test_batch_hashes_match_per_image():
     """r13 batching contract: dhash64_batch / ahash64_batch over an
     (n, h, w) stack are bit-identical to the per-image hashes for any

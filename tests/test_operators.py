@@ -427,23 +427,39 @@ def test_ivf_kmeans_recall_at_least_default(spark):
     assert full == exact
 
 
-def test_pair_clusters_chain_and_islands(spark):
+_CHAIN_AND_ISLANDS = [(5, 9), (9, 11), (2, 3)]
+
+
+@pytest.mark.parametrize(
+    "rows, key_type, expected",
+    [
+        (_CHAIN_AND_ISLANDS, "bigint", {5: 5, 9: 5, 11: 5, 2: 2, 3: 2}),
+        ([], "bigint", {}),
+        (_CHAIN_AND_ISLANDS, "int", {5: 5, 9: 5, 11: 5, 2: 2, 3: 2}),
+    ],
+    ids=["chain_and_islands", "empty", "int_keys"],
+)
+def test_pair_clusters_chain_and_islands(spark, rows, key_type, expected):
     """A chain a-b, b-c must collapse to one cluster labeled min(id);
-    disconnected pairs keep separate labels."""
+    disconnected pairs keep separate labels.  An empty pair set (which
+    dedup_pipeline_roi can produce) yields no rows, and the output keeps
+    the input key type."""
     from data_engineering_individual_assignment_spark.operators.dedup import (
         pair_clusters,
     )
 
-    pairs = spark.createDataFrame(
-        [(5, 9), (9, 11), (2, 3)], "doc_a long, doc_b long"
-    )
-    out = {r["doc_id"]: r["cluster_id"] for r in pair_clusters(pairs).collect()}
-    assert out == {5: 5, 9: 5, 11: 5, 2: 2, 3: 2}
+    pairs = spark.createDataFrame(rows, f"doc_a {key_type}, doc_b {key_type}")
+    clusters = pair_clusters(pairs)
+    assert clusters.dtypes == [("doc_id", key_type), ("cluster_id", key_type)]
+    out = {r["doc_id"]: r["cluster_id"] for r in clusters.collect()}
+    assert out == expected
 
 
 def test_pair_clusters_long_chain_converges(spark):
-    """A 30-node drift chain (diameter 29) must converge well inside
-    max_iter=20 thanks to path halving, all labeled with the min id."""
+    """A 30-node drift chain (diameter 29) must converge in O(log d)
+    rounds thanks to path halving, all labeled with the min id.  It takes
+    5 rounds; pair_clusters raises if it has not converged by max_iter,
+    so max_iter=6 bounds the round count."""
     from data_engineering_individual_assignment_spark.operators.dedup import (
         pair_clusters,
     )
@@ -451,44 +467,12 @@ def test_pair_clusters_long_chain_converges(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 129)], "doc_a long, doc_b long"
     )
-    out = {r["doc_id"]: r["cluster_id"] for r in pair_clusters(pairs).collect()}
+    out = {
+        r["doc_id"]: r["cluster_id"]
+        for r in pair_clusters(pairs, max_iter=6).collect()
+    }
     assert set(out) == set(range(100, 130))
     assert set(out.values()) == {100}
-
-
-def test_star_clusters_chain_and_islands(spark):
-    """large/small-star must produce the same components as label
-    propagation: chain collapses to min-id, islands stay separate."""
-    from data_engineering_individual_assignment_spark.operators.dedup import (
-        star_clusters,
-    )
-
-    pairs = spark.createDataFrame(
-        [(5, 9), (9, 11), (2, 3)], "doc_a long, doc_b long"
-    )
-    out = {r["doc_id"]: r["cluster_id"] for r in star_clusters(pairs).collect()}
-    assert out == {5: 5, 9: 5, 11: 5, 2: 2, 3: 2}
-
-
-def test_star_clusters_long_chain_logarithmic_rounds(spark):
-    """On a 30-node drift chain (diameter 29) the alternating-star
-    algorithm must converge correctly in O(log d) rounds — ceil(log2(29))
-    = 5, +1 for the fixpoint-detection round, +1 slack — not the ~29 a
-    naive propagation would need.  (Path-halved label propagation is
-    also logarithmic; star's advantage at scale is one driver action
-    per round and edge-set — not label-table — state.)"""
-    from data_engineering_individual_assignment_spark.operators.dedup import (
-        LAST_ROUNDS,
-        star_clusters,
-    )
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 129)], "doc_a long, doc_b long"
-    )
-    out = {r["doc_id"]: r["cluster_id"] for r in star_clusters(pairs).collect()}
-    assert set(out) == set(range(100, 130))
-    assert set(out.values()) == {100}
-    assert LAST_ROUNDS["star_clusters"] <= 7
 
 
 def test_pagerank_mass_and_centrality(spark):

@@ -272,17 +272,21 @@ def audio_fingerprints(
                         raw = w.readframes(w.getnframes())
                     x = np.frombuffer(raw, dtype="<i2").astype(np.float64)
                     x /= 32767.0
-                    if len(x) >= FRAME + HOP:  # else: zero subfps, no rows
-                        clips = by_sr.setdefault(int(sr), [])
-                        clips.append((doc_id, x))
-                        if len(clips) >= _FFT_CHUNK:
-                            flush(int(sr), clips)
-                            clips.clear()
                 except Exception:
                     ids.append(doc_id)
                     frames.append(None)
                     fps.append(None)
                     oks.append(False)
+                    continue
+                # the chunk flush stays outside the per-doc try: a transform
+                # error is not this doc's decode failure, and must not leave
+                # the chunk queued for a second flush
+                if len(x) >= FRAME + HOP:  # else: zero subfps, no rows
+                    clips = by_sr.setdefault(int(sr), [])
+                    clips.append((doc_id, x))
+                    if len(clips) >= _FFT_CHUNK:
+                        flush(int(sr), clips)
+                        clips.clear()
             for sr, clips in by_sr.items():
                 if clips:
                     flush(sr, clips)

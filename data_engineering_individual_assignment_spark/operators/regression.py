@@ -5,7 +5,8 @@ Python loops (``lambda_function_final.py:22-99``).  Here:
 
 - ``ols_fit``: closed-form simple OLS as ONE aggregation —
   b1 = covar_pop(x,y)/var_pop(x), b0 = ȳ − b1·x̄.  No collect; returns a
-  1-row DataFrame.
+  1-row DataFrame.  ``ols_fit_rmse`` adds the in-sample RMSE to that
+  same aggregation (the daily model artifact).
 - ``predict``: ŷ = b0 + b1·x as a column expression against the
   broadcast 1-row coefficient frame (reference C9, ``LF:78-84``).
 - ``rmse``: √(mean((ŷ−y)²)) (reference A6, ``LF:32-38``).
@@ -20,18 +21,40 @@ Python loops (``lambda_function_final.py:22-99``).  Here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _slope(x: str, y: str) -> Column:
+    """b1 = covar_pop(x,y)/var_pop(x).  try_divide: zero x-variance
+    (constant or single-row input) yields a null slope instead of an
+    ANSI divide-by-zero error."""
+    return F.try_divide(F.covar_pop(x, y), F.var_pop(x))
+
+
 def ols_fit(df: DataFrame, x: str, y: str) -> DataFrame:
-    """1-row DataFrame (b0, b1, n) — closed-form simple OLS.
-    try_divide: zero x-variance (constant or single-row input) yields a
-    null slope instead of an ANSI divide-by-zero error."""
-    b1 = F.try_divide(F.covar_pop(x, y), F.var_pop(x))
+    """1-row DataFrame (b0, b1, n) — closed-form simple OLS."""
+    b1 = _slope(x, y)
     return df.agg(
         (F.avg(y) - b1 * F.avg(x)).alias("b0"),
         b1.alias("b1"),
+        F.count("*").alias("n"),
+    )
+
+
+def ols_fit_rmse(df: DataFrame, x: str, y: str) -> DataFrame:
+    """1-row DataFrame (b0, b1, rmse, n): ``ols_fit`` plus the in-sample
+    RMSE in the SAME aggregation.  For the OLS line the mean squared
+    residual is var_pop(y) − b1·covar_pop(x,y), so no second pass over
+    the rows (and no broadcast of the coefficients back to them) is
+    needed.  The difference can round a hair below zero on an exact
+    fit, hence the clamp; rmse stays null where b1 is null."""
+    b1 = _slope(x, y)
+    mse = F.var_pop(y) - b1 * F.covar_pop(x, y)
+    return df.agg(
+        (F.avg(y) - b1 * F.avg(x)).alias("b0"),
+        b1.alias("b1"),
+        F.when(mse.isNotNull(), F.sqrt(F.greatest(mse, F.lit(0.0)))).alias("rmse"),
         F.count("*").alias("n"),
     )
 
@@ -112,7 +135,7 @@ def exact_random_split(
 def fit_per_group(df: DataFrame, group: str, x: str, y: str) -> DataFrame:
     """Per-group simple OLS (SURVEY U4) as a grouped aggregation: returns
     (group, b0, b1, n).  Groups with zero x-variance yield null b1."""
-    b1 = F.try_divide(F.covar_pop(x, y), F.var_pop(x))
+    b1 = _slope(x, y)
     return df.groupBy(group).agg(
         (F.avg(y) - b1 * F.avg(x)).alias("b0"),
         b1.alias("b1"),

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_warehouse_table(
@@ -35,10 +36,15 @@ def write_warehouse_table(
     mode: str = "overwrite",
 ) -> None:
     """Canonical sink: parquet partitioned by the ingest date, dynamic
-    overwrite so reruns are idempotent per partition."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
+    overwrite so reruns are idempotent per partition.  The mode is a
+    writer option, not a session conf, so concurrent writers never
+    touch shared state."""
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def overwrite_day_partition(
@@ -141,11 +147,22 @@ def write_jdbc(
 
 
 def register_warehouse_view(
-    spark: SparkSession, name: str, path: str
+    spark: SparkSession,
+    name: str,
+    path: str,
+    schema: T.StructType,
 ) -> None:
     """S9: expose a written table to SQL (the CREATE TABLE IF NOT EXISTS
-    role, F:64-118) without a metastore: a temp view over the parquet."""
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    role, F:64-118) without a metastore: a temp view over the parquet.
+
+    ``schema`` is the schema of the frame that was written; the view
+    reads it back declared, plus the ``ingest_date`` partition column
+    (its 'yyyy_MM_dd' keys infer as string anyway), so no footer job
+    rediscovers what the writer already knew.  Fields are nullable, as
+    a file source reports them."""
+    fields = [T.StructField(f.name, f.dataType) for f in schema.fields]
+    fields.append(T.StructField("ingest_date", T.StringType()))
+    spark.read.schema(T.StructType(fields)).parquet(path).createOrReplaceTempView(name)
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:

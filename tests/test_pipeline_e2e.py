@@ -4,8 +4,61 @@ Also covers the GA flat file (S7) + nearest-date as-of enrichment."""
 
 from __future__ import annotations
 
+import json
+import os
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+LANDING_KEYS = ("search", "comments", "stats", "snippets")
+
+
+def _landing(base: str, stats: list[tuple[int, int]] | None = None) -> dict[str, str]:
+    """The fixture landing files; ``stats`` replaces the statistics pages
+    with one video per (views, comments) pair."""
+    from data_engineering_individual_assignment_spark.sources import fixtures
+
+    paths = fixtures.write_fixtures(base)
+    if stats is not None:
+        with open(paths["stats"], "w") as fh:
+            for i, (views, comments) in enumerate(stats):
+                page = {"video_id": f"v{i}", "items": [{"statistics": {
+                    "viewCount": str(views), "commentCount": str(comments)}}]}
+                fh.write(json.dumps(page) + "\n")
+    return {k: paths[k] for k in LANDING_KEYS}
+
+
+def _ga_csv(tmp_path) -> str:
+    """A two-day Google-Analytics flat file."""
+    ga_path = str(tmp_path / "ga.csv")
+    with open(ga_path, "w") as fh:
+        fh.write(
+            "date,average_session_duration,bounce_rate,new_users,"
+            "number_of_sessions_per_user,pages_per_session,page_views,users\n"
+            "04/03/2021,120.5,0.4,10,1.2,3.4,500,40\n"
+            "06/03/2021,130.0,0.35,12,1.3,3.6,600,45\n"
+        )
+    return ga_path
+
+
+def _grouped_jobs(spark, group: str, fn):
+    """Run ``fn`` under a job group; return the number of jobs in the
+    group and the number of jobs started outside any group."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    stray = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    return len(tracker.getJobIdsForGroup(group)), len(stray)
 
 
 @pytest.fixture(scope="module")
@@ -83,15 +136,7 @@ def test_ga_csv_and_asof_enrichment(spark, warehouse, tmp_path):
     from data_engineering_individual_assignment_spark.sources.readers import read_ga_csv
 
     wh, tables = warehouse
-    ga_path = str(tmp_path / "ga.csv")
-    with open(ga_path, "w") as fh:
-        fh.write(
-            "date,average_session_duration,bounce_rate,new_users,"
-            "number_of_sessions_per_user,pages_per_session,page_views,users\n"
-            "04/03/2021,120.5,0.4,10,1.2,3.4,500,40\n"
-            "06/03/2021,130.0,0.35,12,1.3,3.6,600,45\n"
-        )
-    ga = read_ga_csv(spark, ga_path)
+    ga = read_ga_csv(spark, _ga_csv(tmp_path))
     assert dict(ga.dtypes)["date_parsed"] == "date"
 
     comments = tables["video_comments"].withColumn(
@@ -117,3 +162,119 @@ def test_ga_csv_and_asof_enrichment(spark, warehouse, tmp_path):
             assert r["page_views"] == 500   # nearest GA day: 04/03
         else:
             assert r["page_views"] == 600   # nearest GA day: 06/03
+
+
+def test_views_declare_the_written_schema(spark, warehouse):
+    """Each view reads back with the schema the writer held: the same
+    types and nullability as an inferring read of the same path."""
+    from data_engineering_individual_assignment_spark.pipeline import WAREHOUSE_TABLES
+
+    wh, _ = warehouse
+    for name in WAREHOUSE_TABLES:
+        view = [(f.name, f.dataType, f.nullable) for f in spark.table(name).schema]
+        inferred = spark.read.parquet(os.path.join(wh, name)).schema
+        assert view == [(f.name, f.dataType, f.nullable) for f in inferred], name
+
+
+def test_daily_run_job_budget(spark, warehouse, tmp_path):
+    """Concurrent landing, declared read-backs and the one-aggregation
+    model: a day takes at most 11 jobs (18 when the writes ran one after
+    another and every read-back inferred its schema), serving takes 1,
+    and every job carries the caller's job group."""
+    from data_engineering_individual_assignment_spark import pipeline
+
+    wh, _ = warehouse
+    landing = _landing(str(tmp_path))
+    n_run, stray_run = _grouped_jobs(
+        spark, "test-daily-run",
+        lambda: pipeline.daily_run(spark, landing, wh, day="2026_08_13"),
+    )
+    n_serve, stray_serve = _grouped_jobs(
+        spark, "test-serve",
+        lambda: pipeline.model_http_response(spark, wh, "2026_08_13"),
+    )
+    assert 0 < n_run <= 11
+    assert n_serve == 1
+    assert stray_run == stray_serve == 0
+
+
+@pytest.mark.parametrize(
+    "stats, exact",
+    [
+        (None, False),  # the fixture day
+        ([(x, 2 * x + 1) for x in (1, 3, 4, 8, 9)], True),
+        ([(5 * x, (x * x) % 7 + x) for x in range(1, 41)], False),
+    ],
+    ids=["fixture", "exact_fit", "noisy"],
+)
+def test_served_model_matches_numpy_ols(spark, tmp_path, stats, exact):
+    from data_engineering_individual_assignment_spark import pipeline
+
+    wh = str(tmp_path / "wh")
+    pipeline.daily_run(spark, _landing(str(tmp_path), stats), wh, day="2026_08_13")
+    body = json.loads(pipeline.model_http_response(spark, wh, "2026_08_13")["body"])
+    assert list(body) == ["b0", "b1", "n", "rmse"]
+
+    xy = np.array(
+        spark.read.parquet(f"{wh}/video_statistics").select("views", "comments").collect(),
+        dtype=float,
+    )
+    x, y = xy[:, 0], xy[:, 1]
+    b1 = np.mean((x - x.mean()) * (y - y.mean())) / np.var(x)
+    b0 = y.mean() - b1 * x.mean()
+    rmse = np.sqrt(np.mean((b0 + b1 * x - y) ** 2))
+    assert body["n"] == len(x)
+    assert np.allclose([body["b0"], body["b1"]], [b0, b1], rtol=1e-9)
+    if exact:  # y = 2x + 1: the one-pass residual variance rounds near 0
+        assert (b0, b1) == pytest.approx((1.0, 2.0))
+        assert body["rmse"] == pytest.approx(0.0, abs=1e-6)
+    else:
+        assert body["rmse"] == pytest.approx(rmse, rel=1e-9)
+
+
+def test_constant_views_serve_all_four_keys(spark, tmp_path):
+    """Zero x-variance: the fit is undefined, and the body still carries
+    every key, with null where a value is undefined."""
+    from data_engineering_individual_assignment_spark import pipeline
+
+    wh = str(tmp_path / "wh")
+    stats = [(100, c) for c in (1, 5, 9)]
+    pipeline.daily_run(spark, _landing(str(tmp_path), stats), wh, day="2026_08_13")
+    body = json.loads(pipeline.model_http_response(spark, wh, "2026_08_13")["body"])
+    assert body == {"b0": None, "b1": None, "n": 3, "rmse": None}
+
+
+def test_ga_csv_lands_as_fifth_table(spark, tmp_path):
+    """With the GA file the day lands five tables from five threads, and
+    the fifth view reads back like the others."""
+    from data_engineering_individual_assignment_spark import pipeline
+
+    wh = str(tmp_path / "wh")
+    pipeline.daily_run(
+        spark, _landing(str(tmp_path)), wh, day="2026_08_13",
+        ga_csv_path=_ga_csv(tmp_path),
+    )
+    view = spark.table("website_statistics")
+    assert view.dtypes == spark.read.parquet(f"{wh}/website_statistics").dtypes
+    assert [r["page_views"] for r in view.orderBy("date").collect()] == [500, 600]
+    assert view.filter(F.col("ingest_date") == "2026_08_13").count() == 2
+
+
+def test_failed_table_write_raises_and_others_land(spark, tmp_path, monkeypatch):
+    from data_engineering_individual_assignment_spark import pipeline
+
+    write = pipeline.overwrite_day_partition
+
+    def failing(df, path, day):
+        if path.endswith("video_tags"):
+            raise RuntimeError("disk full")
+        write(df, path, day)
+
+    monkeypatch.setattr(pipeline, "overwrite_day_partition", failing)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="disk full"):
+        pipeline.daily_run(spark, _landing(str(tmp_path)), wh, day="2026_08_13")
+    for name in ("video_descriptions", "video_statistics", "video_comments"):
+        assert os.path.isdir(os.path.join(wh, name, "ingest_date=2026_08_13")), name
+    assert not os.path.exists(os.path.join(wh, "video_tags"))
+    assert not os.path.exists(os.path.join(wh, "regression_model"))

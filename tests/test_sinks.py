@@ -15,6 +15,10 @@ def test_overwrite_day_partition_idempotent(spark, tmp_path):
     )
     from data_engineering_individual_assignment_spark.sources.readers import load_table
 
+    # a STATIC session: dynamic overwrite must come from the writer
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(key)
+    spark.conf.set(key, "static")
     wh = str(tmp_path / "wh")
     orders = load_table(spark, SF_SMALL, "orders").limit(100)
     overwrite_day_partition(orders, wh, "2026_08_13")
@@ -26,6 +30,16 @@ def test_overwrite_day_partition_idempotent(spark, tmp_path):
     # a second day adds, first day untouched
     overwrite_day_partition(orders.limit(10), wh, "2026_08_14")
     assert spark.read.parquet(wh).count() == 110
+    # re-running the first day leaves the second day's partition in place
+    overwrite_day_partition(orders.limit(40), wh, "2026_08_13")
+    per_day = {
+        r["ingest_date"]: r["count"]
+        for r in spark.read.parquet(wh).groupBy("ingest_date").count().collect()
+    }
+    assert per_day == {"2026_08_13": 40, "2026_08_14": 10}
+    # dynamic overwrite is a writer option: the session conf is untouched
+    assert spark.conf.get(key).lower() == "static"
+    spark.conf.set(key, mode_before)
 
 
 def test_semicolon_csv_roundtrip(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Grouped-aggregate (UDAF-style) pandas UDFs — the third pandas-UDF
 API surface next to the scalar UDFs (functions/vectors.py, text.py) and
-the grouped-map/cogroup paths (operators/regression.py, joins.py).
+the grouped-map/cogroup paths (operators/regression.py, similarity.py).
 
 A GROUPED_AGG pandas UDF receives each group's column as ONE pandas
 Series (Arrow-transferred) and returns a scalar — Spark runs it inside

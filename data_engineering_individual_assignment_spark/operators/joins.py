@@ -1,27 +1,20 @@
-"""As-of (nearest-key) join — the one join flavor Spark SQL lacks natively
-(SURVEY §4.3: the GA nearest-date enrichment implied by the reference's
-date-linked schema, DDL ``...final.py:87-111``).
+"""Joins Spark SQL lacks natively: the as-of (nearest-key) join and the
+banded interval-overlap join.
 
-Two implementations:
-
-- ``asof_join``: range-join + row_number pick.  Deterministic (explicit
-  tie-break), oracle-friendly, fully declarative so Catalyst can push
-  filters.  Cost: the range join expands each left row by the number of
-  matching right rows within its by-key before the window prunes to 1 —
-  fine when per-key right cardinality is bounded (dimension history,
-  daily GA rows), which is the reference's shape.
-- ``asof_join_pandas``: co-grouped ``pd.merge_asof`` per by-key via
-  ``cogroup().applyInPandas`` (Arrow-batched).  Linear per group after
-  the shuffle + sort; the 100 TB path when per-key fan-out would make
-  the range join quadratic.  Same semantics (backward direction: latest
-  right row with ts <= left ts).
+``asof_join`` serves the GA nearest-date enrichment implied by the
+reference's date-linked schema (SURVEY §4.3, DDL ``...final.py:87-111``)
+and every as-of query in the catalog.  It is one declarative plan: a
+union of both sides, one shuffle on the by-key and one sort, with zero
+fan-out, so its cost does not depend on how many right rows precede
+each left row.  A bucket-cogrouped ``pd.merge_asof`` twin with the same
+output contract was measured slower at sf0.01, sf0.1, 10x and 100x and
+was deleted.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def asof_join(
@@ -31,7 +24,7 @@ def asof_join(
     right_ts: str,
     left_by: str,
     right_by: str,
-    left_id: str,
+    *,
     tie_break: str | None = None,
     how: str = "left",
     right_cols: list[str] | None = None,
@@ -42,7 +35,8 @@ def asof_join(
     the matching by-key — ``direction='backward'`` (default) picks the
     greatest ``right_ts`` <= ``left_ts``; ``'forward'`` picks the
     smallest ``right_ts`` >= ``left_ts`` (pandas ``merge_asof``
-    directions; both inclusive at equality).
+    directions; both inclusive at equality).  Null by-keys never match,
+    as in SQL's ``ON r.by = l.by``, and null timestamps never match.
 
     ``tolerance`` (e.g. ``"30 DAYS"``): maximum staleness — a match
     older than ``left_ts - tolerance`` is treated as NO match (nulled
@@ -51,7 +45,8 @@ def asof_join(
     so it adds zero shuffles.
 
     ``right_cols`` prunes the right payload carried through the window
-    (default: every right column) — at scale, carry only what you need.
+    (``None``: every right column) — at scale, carry only what you
+    need.  An empty list is rejected: the join would add no column.
 
     Implementation is the union-merge carry-forward: tag both sides,
     union them, sort per by-key on (ts, side) with right rows first at
@@ -59,15 +54,12 @@ def asof_join(
     with last(..., ignoreNulls) over an unbounded-preceding frame.  One
     shuffle + one sort, ZERO fan-out — per-key cost is O((|L|+|R|) log),
     independent of how many right rows precede each left row (a naive
-    range-join + row_number pick is O(|L|·|R|) per key).  This is the
-    100 TB-safe exact form; ``asof_join_pandas`` below trades it for
-    arrow-batched merge_asof when pandas-side logic is wanted.
+    range-join + row_number pick is O(|L|·|R|) per key).
 
     ``tie_break``: right column that decides equal-``right_ts`` winners
     (backward: max tie_break at the max eligible ts; forward: min
-    tie_break at the min eligible ts).  ``left_id`` is retained for API
-    compatibility and must be non-null per row.  ``how='left'`` keeps
-    unmatched left rows with null right columns; ``'inner'`` drops them.
+    tie_break at the min eligible ts).  ``how='left'`` keeps unmatched
+    left rows with null right columns; ``'inner'`` drops them.
 
     The forward direction is the SAME single-shuffle carry plan run in
     reverse scan order: sort each by-key descending on ts, and the
@@ -76,16 +68,19 @@ def asof_join(
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
+    if right_cols is not None and not right_cols:
+        raise ValueError("right_cols=[] adds no column; pass None for all")
     fwd = direction == "forward"
     needed = set(right_cols or right.columns) | {right_ts, right_by}
     if tie_break:
         needed.add(tie_break)
     # a null right_ts can never satisfy right_ts <= left_ts, so those rows
     # must not enter the carry-forward (nulls-first ordering would otherwise
-    # make them eligible for every left row); mirrors asof_join_pandas
-    right = right.filter(F.col(right_ts).isNotNull()).select(
-        *[c for c in right.columns if c in needed]
-    )
+    # make them eligible for every left row); a null right_by shares the
+    # null __by partition with null-key left rows and must not match them
+    right = right.filter(
+        F.col(right_ts).isNotNull() & F.col(right_by).isNotNull()
+    ).select(*[c for c in right.columns if c in needed])
     out_right_cols = right_cols or right.columns
     # carry the pruned right row as one struct so last(ignoreNulls) moves
     # all payload columns together.  The struct packs ONLY what is read
@@ -155,146 +150,6 @@ def asof_join(
         *[F.col(c) for c in left.columns],
         *[F.col("__last_r").getField(c).alias(c) for c in out_right_cols],
     )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    left_ts: str,
-    right_ts: str,
-    left_by: str,
-    right_by: str,
-    right_cols: list[str],
-    direction: str = "backward",
-    tie_break: str | None = None,
-    num_buckets: int = 64,
-) -> DataFrame:
-    """Scale-path as-of join: both sides are hash-partitioned on a
-    COARSE bucket of the by-key (``xxhash64 % num_buckets``), then ONE
-    ``pd.merge_asof(by=key)`` call handles every key in the bucket.
-    ``direction`` is passed through to ``merge_asof``
-    (``backward``/``forward``, inclusive at equality).
-
-    Bucketing matters: co-grouping on the raw key invokes Python once
-    per KEY (~100k interpreter round-trips at sf0.1 — measured 39 s,
-    the same per-group pathology ``capped_decay_balance`` had), while
-    ``merge_asof``'s ``by=`` argument does the per-key split inside one
-    vectorized C call, so ``num_buckets`` bounds the Python-call count
-    regardless of key cardinality.
-
-    ``tie_break``: the right column that decides equal-``right_ts``
-    winners, mirroring ``asof_join``'s semantics (backward: max,
-    forward: min).  When omitted, ties fall back to ``right_cols``
-    order — a caller pairing this with the declarative twin should
-    always pass the same ``tie_break``.
-
-    Output schema: all left columns + ``right_cols`` (nullable).
-    ``right_ts`` must be distinct from every left column name, and the
-    by-keys must be the same type on both sides (they are equated).
-    """
-    import pandas as pd
-
-    r_fields = {f.name: f for f in right.schema.fields}
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(c, r_fields[c].dataType, True) for c in right_cols]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-    slim_cols = list(right_cols)
-    if tie_break and tie_break not in slim_cols:
-        slim_cols.append(tie_break)  # the sort key must ride along
-    # null-ts / null-by right rows can never be picked: dropping them
-    # SPARK-side (not in pandas) keeps the Arrow handoff null-free, so
-    # an int64 by-key arrives as int64 — a null-bearing long column
-    # would cross Arrow as float64 and round keys above 2^53
-    right_slim = right.select(right_by, right_ts, *slim_cols).filter(
-        F.col(right_by).isNotNull() & F.col(right_ts).isNotNull()
-    )
-    # ... and the SAME split on the LEFT side: a single null in a long
-    # column makes Arrow hand the whole column over as float64, so even
-    # the non-null left keys would round above 2^53 before pandas could
-    # split them.  Null-by / null-ts left rows can never match — set them
-    # aside Spark-side and re-append with a null payload at the end.
-    left_nulls = left.filter(F.col(left_by).isNull() | F.col(left_ts).isNull())
-    left_clean = left.filter(
-        F.col(left_by).isNotNull() & F.col(left_ts).isNotNull()
-    )
-
-    bkt = lambda c: F.pmod(F.xxhash64(F.col(c)), F.lit(num_buckets)).cast("int")  # noqa: E731
-    left_b = left_clean.withColumn("__asof_bkt", bkt(left_by))
-    right_b = right_slim.withColumn("__asof_bkt", bkt(right_by))
-
-    def merge_bucket(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        lpdf = lpdf.drop(columns=["__asof_bkt"])
-        rpdf = rpdf.drop(columns=["__asof_bkt"])
-        # merge_asof raises on null ON keys: null-ts or null-by left rows
-        # can never match (set-aside, re-appended with null payload);
-        # null-ts / null-by right rows can never be picked (dropped)
-        null_left = lpdf[lpdf[left_ts].isna() | lpdf[left_by].isna()]
-        lpdf = lpdf[lpdf[left_ts].notna() & lpdf[left_by].notna()]
-        rpdf = rpdf[rpdf[right_ts].notna() & rpdf[right_by].notna()]
-        if not null_left.empty:
-            for c in right_cols:
-                null_left = null_left.assign(**{c: None})
-        if lpdf.empty:
-            return null_left[out_cols]
-        if rpdf.empty:
-            for c in right_cols:
-                lpdf[c] = None
-            return pd.concat([lpdf, null_left])[out_cols] if not null_left.empty else lpdf[out_cols]
-        # by-keys must agree in dtype for merge_asof (Arrow hands a
-        # null-bearing long column over as float64): unify on mismatch.
-        # Integer-family keys unify on nullable Int64 — a float64 cast
-        # would lose precision above 2^53 and let distinct keys collide;
-        # float64 is only the fallback for genuinely float keys.
-        if lpdf[left_by].dtype != rpdf[right_by].dtype:
-            try:
-                # nullable Int64 is exact for the int64-vs-float64(nulls)
-                # mismatch; raises on genuinely fractional float keys
-                lk = lpdf[left_by].astype("Int64")
-                rk = rpdf[right_by].astype("Int64")
-            except (TypeError, ValueError):
-                lk = lpdf[left_by].astype("float64")
-                rk = rpdf[right_by].astype("float64")
-            lpdf = lpdf.assign(**{left_by: lk})
-            rpdf = rpdf.assign(**{right_by: rk})
-        # secondary sort makes equal-ts winners deterministic: merge_asof
-        # keeps the LAST equal-ts row (per by-group) going backward and
-        # the FIRST going forward, so (ts, tie)-ascending order picks
-        # max-tie backward / min-tie forward — matching the declarative
-        # twin's tie_break.  mergesort is stable, so same-key rows keep
-        # this relative order inside the bucket-wide frame.
-        tie_cols = [tie_break] if tie_break else list(right_cols)
-        rpdf = rpdf.sort_values([right_ts, *tie_cols], kind="mergesort")
-        lpdf = lpdf.sort_values([left_ts], kind="mergesort")
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf[[right_by, right_ts, *right_cols]],
-            left_on=left_ts,
-            right_on=right_ts,
-            left_by=left_by,
-            right_by=right_by,
-            direction=direction,
-        )
-        if not null_left.empty:
-            merged = pd.concat([merged[out_cols], null_left[out_cols]])
-        return merged[out_cols]
-
-    merged = (
-        left_b.groupBy("__asof_bkt")
-        .cogroup(right_b.groupBy("__asof_bkt"))
-        .applyInPandas(merge_bucket, schema=out_schema)
-    )
-    null_payload = left_nulls.select(
-        "*",
-        *[
-            F.lit(None).cast(r_fields[c].dataType).alias(c)
-            for c in right_cols
-        ],
-    )
-    return merged.unionByName(null_payload)
 
 
 def interval_overlap_join(

@@ -880,6 +880,9 @@ class _BitReader:
         self.marker = None
 
     def _fill(self) -> None:
+        # drop the consumed high bits first: without it acc grows by 8
+        # bits per byte, and every shift copies the whole segment so far
+        self.acc &= (1 << self.nbits) - 1
         d = self.data
         while self.nbits < 25:
             if self.pos >= len(d):

@@ -132,10 +132,9 @@ def viterbi_path(
     budget-bounded vocabulary (<= ~76 pieces), but blows plan size /
     codegen at a production 32k-256k-piece vocabulary.  The
     production-scale twin is ``viterbi_segment_pandas`` (broadcast
-    piece dict scored in Arrow-batched mapInPandas, the
-    ``asof_join_pandas`` pattern), agreement-tested against this
-    expression path on identical inputs and exercised at a widened
-    vocabulary where this path is not viable."""
+    piece dict scored in Arrow-batched mapInPandas), agreement-tested
+    against this expression path on identical inputs and exercised at a
+    widened vocabulary where this path is not viable."""
     args: list[Column] = []
     for p in sorted(piece_logp):
         args += [F.lit(p), F.lit(int(piece_logp[p]))]

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..operators.regression import fit_per_group
 from ..sources.readers import load_table
 from .catalog import register
+from .extensions import ASOF_EVENTS_ORDERS_SQL, asof_join_events_orders
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -451,59 +452,14 @@ def salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_join_pandas_variant",
-    sql="""
-    WITH ranked AS (
-        SELECT e.event_id, e.user_id, o.o_orderkey, o.o_totalprice,
-               row_number() OVER (PARTITION BY e.event_id
-                   ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-        FROM events e
-        LEFT JOIN orders o
-          ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
-    SELECT event_id, user_id, o_orderkey AS last_orderkey,
-           round(coalesce(o_totalprice, 0.0), 2) AS last_order_price
-    FROM ranked WHERE rn = 1
-    ORDER BY event_id
-    """,
-    doc="the cogrouped merge_asof scale path against the SAME oracle as "
-    "asof_join_events_orders: the right side is first reduced to its "
-    "per-(custkey, date) winner (max orderkey — merge_asof itself has "
-    "no tie-break), then pd.merge_asof runs per co-grouped key. Proves "
-    "the Arrow path agrees with the declarative union-merge form.",
+    sql=ASOF_EVENTS_ORDERS_SQL,
+    doc="the events-to-orders as-of join under its older name, kept "
+    "registered so existing callers of queries() still find it. Served "
+    "by asof_join_events_orders, so rows, schema and oracle are "
+    "identical.",
 )
 def asof_join_pandas_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.joins import asof_join_pandas
-
-    e = _t(spark, sf_dir, "events")
-    o = _t(spark, sf_dir, "orders")
-    # deterministic per-(custkey, date) winner so merge_asof's lack of a
-    # tie-break cannot pick a different row than the oracle
-    w = Window.partitionBy("o_custkey", "o_orderdate").orderBy(
-        F.col("o_orderkey").desc()
-    )
-    best = (
-        o.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "o_custkey",
-            F.col("o_orderdate").cast("timestamp").alias("order_ts"),
-            "o_orderkey",
-            "o_totalprice",
-        )
-    )
-    joined = asof_join_pandas(
-        e, best,
-        left_ts="ts", right_ts="order_ts",
-        left_by="user_id", right_by="o_custkey",
-        right_cols=["o_orderkey", "o_totalprice"],
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.col("o_orderkey").alias("last_orderkey"),
-        F.round(F.coalesce("o_totalprice", F.lit(0.0)), 2).alias("last_order_price"),
-    ).orderBy("event_id")
+    return asof_join_events_orders(spark, sf_dir)
 
 
 @register(

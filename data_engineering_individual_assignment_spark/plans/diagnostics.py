@@ -426,7 +426,6 @@ def asof_forward_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="p_ts",
         left_by="user_id",
         right_by="p_user",
-        left_id="event_id",
         tie_break="p_event_id",
         right_cols=["p_event_id", "p_ts"],
         direction="forward",

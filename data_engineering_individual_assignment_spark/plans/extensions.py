@@ -1140,9 +1140,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # As-of join / sessionization / event-time windows
 # --------------------------------------------------------------------------
-@register(
-    "asof_join_events_orders",
-    sql="""
+ASOF_EVENTS_ORDERS_SQL = """
     WITH ranked AS (
         SELECT e.event_id, e.user_id, o.o_orderkey, o.o_totalprice,
                row_number() OVER (PARTITION BY e.event_id
@@ -1154,11 +1152,17 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(coalesce(o_totalprice, 0.0), 2) AS last_order_price
     FROM ranked WHERE rn = 1
     ORDER BY event_id
-    """,
+    """
+
+
+@register(
+    "asof_join_events_orders",
+    sql=ASOF_EVENTS_ORDERS_SQL,
     doc="as-of join (SURVEY §4.3): each event enriched with the user's "
-    "most recent order at event time — range join + row_number pick with "
-    "deterministic tie-break; asof_join_pandas (cogrouped merge_asof) is "
-    "the high-fan-out variant.",
+    "most recent order at event time, ties broken by the greatest "
+    "orderkey — one union-merge carry-forward (operators/joins."
+    "asof_join): one shuffle and one sort, zero fan-out. The oracle is "
+    "the range join + row_number pick.",
 )
 def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
@@ -1167,7 +1171,7 @@ def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, o,
         left_ts="ts", right_ts="o_orderdate",
         left_by="user_id", right_by="o_custkey",
-        left_id="event_id", tie_break="o_orderkey",
+        tie_break="o_orderkey",
         # carry only the two consumed columns through the union-merge
         # window (guide §2.3 "project before the exchange"): without
         # this the __r struct packs all six orders columns — including
@@ -1215,7 +1219,7 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, o,
         left_ts="ts", right_ts="o_orderdate",
         left_by="user_id", right_by="o_custkey",
-        left_id="event_id", tie_break="o_orderkey",
+        tie_break="o_orderkey",
         tolerance="9000 DAYS",
         # same payload pruning as asof_join_events_orders (r12): only
         # these two columns are consumed downstream

@@ -294,7 +294,6 @@ def temporal_state_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="s_ts",
         left_by="user_id",
         right_by="s_user",
-        left_id="event_id",
         tie_break="s_event_id",
         right_cols=["status"],
     )

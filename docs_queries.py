@@ -9,7 +9,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def render() -> str:
+    """The QUERIES.md text for the catalog as it is registered now."""
     from data_engineering_individual_assignment_spark import plans
 
     lines = [
@@ -40,8 +41,12 @@ def main() -> None:
             check = "oracle" if q.sql else "rows-only"
             lines.append(f"| `{q.name}` | {check} | {doc} |")
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     with open(os.path.join(os.path.dirname(__file__), "QUERIES.md"), "w") as fh:
-        fh.write("\n".join(lines))
+        fh.write(render())
 
 
 if __name__ == "__main__":

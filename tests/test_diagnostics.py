@@ -139,38 +139,6 @@ def test_banded_interval_join_equals_naive_theta_join(spark):
         assert set(banded) == naive
 
 
-def test_forward_asof_agrees_with_pandas_twin(spark):
-    from data_engineering_individual_assignment_spark.operators import joins
-
-    ev = load_table(spark, SF_SMALL, "events")
-    views = ev.where(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    declarative = joins.asof_join(
-        views, purchases,
-        left_ts="ts", right_ts="p_ts",
-        left_by="user_id", right_by="p_user",
-        left_id="event_id", tie_break="p_event_id",
-        right_cols=["p_event_id"], direction="forward",
-    )
-    pandas_twin = joins.asof_join_pandas(
-        views, purchases,
-        left_ts="ts", right_ts="p_ts",
-        left_by="user_id", right_by="p_user",
-        right_cols=["p_event_id"], direction="forward",
-        tie_break="p_event_id",
-    )
-    d = {r.event_id: r.p_event_id for r in declarative.collect()}
-    p = {r.event_id: r.p_event_id for r in pandas_twin.collect()}
-    assert d == p
-    assert any(v is not None for v in d.values())
-
-
 def test_forward_asof_never_matches_the_past(spark):
     df = _q(spark, "asof_forward_next_purchase")
     rows = df.collect()

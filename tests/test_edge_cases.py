@@ -45,12 +45,12 @@ def test_asof_empty_right_side(spark):
         [], "o_custkey long, o_orderdate timestamp, o_orderkey long"
     )
     out = asof_join(
-        left, right, "ts", "o_orderdate", "user_id", "o_custkey", "event_id",
+        left, right, "ts", "o_orderdate", "user_id", "o_custkey",
         tie_break="o_orderkey",
     ).collect()
     assert len(out) == 1 and out[0]["o_orderkey"] is None
     inner = asof_join(
-        left, right, "ts", "o_orderdate", "user_id", "o_custkey", "event_id",
+        left, right, "ts", "o_orderdate", "user_id", "o_custkey",
         tie_break="o_orderkey", how="inner",
     ).collect()
     assert inner == []
@@ -104,122 +104,84 @@ def test_salted_join_rejects_outer_build_modes(spark):
             salted_join(probe, build, "k", probe_salt_col="row_id", how=how)
 
 
-def test_asof_pandas_tolerates_null_timestamps(spark):
-    """Regression: merge_asof raises on null keys — null-ts left rows must
-    come through with null payload, null-ts right rows must be ignored."""
-    from data_engineering_individual_assignment_spark.operators.joins import (
-        asof_join_pandas,
-    )
+_K1, _K2 = 2**53, 2**53 + 1  # indistinguishable as float64
 
-    left = spark.createDataFrame(
-        [(1, "2024-01-02 00:00:00", 7), (2, None, 7)],
-        "event_id long, ts string, user_id long",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    right = spark.createDataFrame(
+# (left rows (event_id, ts, user_id), right rows (o_custkey, order_ts,
+# o_orderkey), expected o_orderkey per event_id under how='left')
+_ASOF_NULL_CASES = [
+    (   # null ts on both sides, and a left row before every right row
+        [(1, "2024-01-02 00:00:00", 7), (2, None, 7),
+         (3, "2023-12-01 00:00:00", 7)],
         [(7, "2024-01-01 00:00:00", 100), (7, None, 999)],
-        "o_custkey long, order_ts string, o_orderkey long",
-    ).withColumn("order_ts", F.col("order_ts").cast("timestamp"))
-    out = {r["event_id"]: r["o_orderkey"] for r in asof_join_pandas(
-        left, right, "ts", "order_ts", "user_id", "o_custkey", ["o_orderkey"]
-    ).collect()}
-    assert out[1] == 100   # matched; the null-ts right row was ignored
-    assert out[2] is None  # null-ts left row survives with null payload
-
-
-def test_asof_pandas_big_int_keys_no_float_collision(spark):
-    """Regression (ADVICE r5): a null-bearing long by-key used to cross
-    Arrow as float64, so int64 keys above 2^53 lost precision and two
-    DISTINCT keys (2^53, 2^53+1) collided — the wrong order matched.
-    Right-side nulls are now dropped Spark-side (column stays int64) and
-    any residual dtype mismatch unifies on nullable Int64, not float64."""
-    from data_engineering_individual_assignment_spark.operators.joins import (
-        asof_join_pandas,
-    )
-
-    k1, k2 = 2**53, 2**53 + 1  # indistinguishable as float64
-    left = spark.createDataFrame(
-        [(1, "2024-01-02 00:00:00", k1), (2, "2024-01-02 00:00:00", k2)],
-        "event_id long, ts string, user_id long",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    right = spark.createDataFrame(
-        [
-            (k1, "2024-01-01 00:00:00", 100),
-            (k2, "2024-01-01 12:00:00", 200),
-            (None, "2024-01-01 18:00:00", 999),  # forces the null path
-        ],
-        "o_custkey long, order_ts string, o_orderkey long",
-    ).withColumn("order_ts", F.col("order_ts").cast("timestamp"))
-    out = {r["event_id"]: r["o_orderkey"] for r in asof_join_pandas(
-        left, right, "ts", "order_ts", "user_id", "o_custkey", ["o_orderkey"]
-    ).collect()}
-    assert out == {1: 100, 2: 200}
-
-
-def test_asof_pandas_big_int_keys_null_on_left(spark):
-    """Regression (ADVICE r6): a null by-key in a LEFT batch used to make
-    Arrow hand the whole left key column over as float64, so DISTINCT
-    left keys above 2^53 were corrupted before the pandas-side null
-    split could help (the Int64 cast preserves already-rounded values).
-    Null-by/null-ts left rows are now set aside SPARK-side and
-    re-appended with a null payload, keeping the Arrow-visible left key
-    column int64.  num_buckets=1 forces every row into one pandas batch
-    so the null row shares the batch with the big keys."""
-    from data_engineering_individual_assignment_spark.operators.joins import (
-        asof_join_pandas,
-    )
-
-    k1, k2 = 2**53, 2**53 + 1  # indistinguishable as float64
-    left = spark.createDataFrame(
-        [
-            (1, "2024-01-02 00:00:00", k1),
-            (2, "2024-01-02 00:00:00", k2),
-            (3, "2024-01-02 00:00:00", None),  # forces the left null path
-        ],
-        "event_id long, ts string, user_id long",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    right = spark.createDataFrame(
-        [
-            (k1, "2024-01-01 00:00:00", 100),
-            (k2, "2024-01-01 12:00:00", 200),
-        ],
-        "o_custkey long, order_ts string, o_orderkey long",
-    ).withColumn("order_ts", F.col("order_ts").cast("timestamp"))
-    out = {r["event_id"]: r["o_orderkey"] for r in asof_join_pandas(
-        left, right, "ts", "order_ts", "user_id", "o_custkey",
-        ["o_orderkey"], num_buckets=1,
-    ).collect()}
-    assert out == {1: 100, 2: 200, 3: None}
+        {1: 100, 2: None, 3: None},
+    ),
+    (   # int64 keys above 2^53 next to a null right key
+        [(1, "2024-01-02 00:00:00", _K1), (2, "2024-01-02 00:00:00", _K2)],
+        [(_K1, "2024-01-01 00:00:00", 100), (_K2, "2024-01-01 12:00:00", 200),
+         (None, "2024-01-01 18:00:00", 999)],
+        {1: 100, 2: 200},
+    ),
+    (   # ... and a null left key, which must not pick up the null right key
+        [(1, "2024-01-02 00:00:00", _K1), (2, "2024-01-02 00:00:00", _K2),
+         (3, "2024-01-02 00:00:00", None)],
+        [(_K1, "2024-01-01 00:00:00", 100), (_K2, "2024-01-01 12:00:00", 200),
+         (None, "2024-01-01 18:00:00", 999)],
+        {1: 100, 2: 200, 3: None},
+    ),
+]
 
 
 def test_asof_declarative_tolerates_null_timestamps(spark):
-    """Regression: with nulls-first ordering a null-ts right row sorted
-    before everything and its payload was carried into null-ts left rows
-    and left rows earlier than every real right row.  Null-ts right rows
-    must be ignored; null-ts left rows survive with null payload."""
+    """Null timestamps and null by-keys never match.  With nulls-first
+    ordering a null-ts right row once sorted before everything and its
+    payload was carried into null-ts left rows and left rows earlier
+    than every real right row; a null left key once shared the null
+    partition with a null right key and picked up its payload (999).
+    Keys above 2^53 must stay distinct."""
+    from data_engineering_individual_assignment_spark.operators.joins import asof_join
+
+    for left_rows, right_rows, expect in _ASOF_NULL_CASES:
+        left = spark.createDataFrame(
+            left_rows, "event_id long, ts string, user_id long"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        right = spark.createDataFrame(
+            right_rows, "o_custkey long, order_ts string, o_orderkey long"
+        ).withColumn("order_ts", F.col("order_ts").cast("timestamp"))
+        out = {r["event_id"]: r["o_orderkey"] for r in asof_join(
+            left, right, "ts", "order_ts", "user_id", "o_custkey",
+            right_cols=["o_orderkey"],
+        ).collect()}
+        assert out == expect
+        inner = asof_join(
+            left, right, "ts", "order_ts", "user_id", "o_custkey",
+            right_cols=["o_orderkey"], how="inner",
+        ).collect()
+        assert sorted(r["event_id"] for r in inner) == sorted(
+            k for k, v in expect.items() if v is not None
+        )
+
+
+def test_asof_rejects_empty_right_cols_and_positional_options(spark):
+    """right_cols=[] would add no column; it must not silently mean
+    every right column, which is what None means.  Options after
+    right_by are keyword-only, so a stale seventh positional argument
+    (the removed left_id) fails instead of becoming tie_break."""
+    import pytest
     from data_engineering_individual_assignment_spark.operators.joins import asof_join
 
     left = spark.createDataFrame(
-        [
-            (1, "2024-01-02 00:00:00", 7),   # after the real right row
-            (2, None, 7),                     # null-ts left
-            (3, "2023-12-01 00:00:00", 7),   # before every real right row
-        ],
-        "event_id long, ts string, user_id long",
+        [(1, "2024-01-02 00:00:00", 7)], "event_id long, ts string, user_id long"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     right = spark.createDataFrame(
-        [(7, "2024-01-01 00:00:00", 100), (7, None, 999)],
+        [(7, "2024-01-01 00:00:00", 100)],
         "o_custkey long, order_ts string, o_orderkey long",
     ).withColumn("order_ts", F.col("order_ts").cast("timestamp"))
-    out = {r["event_id"]: r["o_orderkey"] for r in asof_join(
-        left, right, "ts", "order_ts", "user_id", "o_custkey", "event_id",
-        right_cols=["o_orderkey"],
-    ).collect()}
-    assert out == {1: 100, 2: None, 3: None}
-    inner = asof_join(
-        left, right, "ts", "order_ts", "user_id", "o_custkey", "event_id",
-        right_cols=["o_orderkey"], how="inner",
-    ).collect()
-    assert [r["event_id"] for r in inner] == [1]
+    with pytest.raises(ValueError, match="right_cols"):
+        asof_join(left, right, "ts", "order_ts", "user_id", "o_custkey", right_cols=[])
+    every = asof_join(left, right, "ts", "order_ts", "user_id", "o_custkey")
+    assert every.columns == left.columns + right.columns
+    with pytest.raises(TypeError):
+        asof_join(left, right, "ts", "order_ts", "user_id", "o_custkey", "event_id")
 
 
 def test_asof_tie_break_excluded_from_right_cols(spark):
@@ -235,7 +197,7 @@ def test_asof_tie_break_excluded_from_right_cols(spark):
         "o_custkey long, o_orderdate string, o_orderkey long, o_totalprice double",
     ).withColumn("o_orderdate", F.col("o_orderdate").cast("timestamp"))
     out = asof_join(
-        left, right, "ts", "o_orderdate", "user_id", "o_custkey", "event_id",
+        left, right, "ts", "o_orderdate", "user_id", "o_custkey",
         tie_break="o_orderkey", right_cols=["o_totalprice"],
     ).collect()
     assert len(out) == 1
@@ -298,8 +260,7 @@ def test_forward_asof_with_no_right_rows(spark):
         left, right,
         left_ts="ts", right_ts="p_ts",
         left_by="user_id", right_by="p_user",
-        left_id="event_id", right_cols=["p_event_id"],
-        direction="forward",
+        right_cols=["p_event_id"], direction="forward",
     ).collect()
     assert len(out) == 1 and out[0].p_event_id is None
 

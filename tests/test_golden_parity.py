@@ -165,7 +165,7 @@ def test_real_ga_file_ingests_and_enriches(spark, tmp_path):
     out = {r["probe_id"]: r for r in asof_join(
         probes.withColumn("k", F.lit(1)),
         stats.withColumn("k", F.lit(1)),
-        "d", "date_parsed", "k", "k", "probe_id",
+        "d", "date_parsed", "k", "k",
         right_cols=["users", "date_parsed"],
     ).collect()}
     # GA export ends 2021-05-07: backward as-of carries that latest row

@@ -293,6 +293,32 @@ def test_jpeg_over_subscribed_dht_raises():
         decode_jpeg(bytes(payload))
 
 
+def test_jpeg_bit_reader_stays_bounded(monkeypatch):
+    """Decoding a multi-KB entropy segment must keep the bit reader's
+    accumulator at most one fill wide (<= 32 bits after a fill), not a
+    bignum holding every byte read so far, whose shifts make the decode
+    quadratic in segment size."""
+    from data_engineering_individual_assignment_spark.operators import multimodal
+
+    rng = np.random.default_rng(5)
+    g = rng.uniform(0, 255, (64, 64))  # noise: long entropy segment
+    planes = [g, np.full_like(g, 128.0), np.full_like(g, 100.0)]
+    payload = encode_jpeg_planes(planes, 64, 64)
+    assert len(payload) > 4096
+
+    widest = [0]
+
+    class _Probe(multimodal._BitReader):
+        def _fill(self):
+            super()._fill()
+            widest[0] = max(widest[0], self.acc.bit_length())
+
+    monkeypatch.setattr(multimodal, "_BitReader", _Probe)
+    img = multimodal.decode_jpeg(payload)
+    assert (img["width"], img["height"]) == (64, 64)
+    assert 0 < widest[0] <= 32 + 8
+
+
 def test_batch_hashes_match_per_image():
     """r13 batching contract: dhash64_batch / ahash64_batch over an
     (n, h, w) stack are bit-identical to the per-image hashes for any

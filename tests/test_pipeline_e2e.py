@@ -141,9 +141,7 @@ def test_ga_csv_and_asof_enrichment(spark, warehouse, tmp_path):
 
     comments = tables["video_comments"].withColumn(
         "comment_date", F.to_date("date", "yyyy/MM/dd")
-    ).withColumn("join_key", F.lit(1)).withColumn(
-        "comment_id", F.monotonically_increasing_id()
-    )
+    ).withColumn("join_key", F.lit(1))
     enriched = asof_join(
         comments,
         ga.withColumn("join_key", F.lit(1)),
@@ -151,7 +149,6 @@ def test_ga_csv_and_asof_enrichment(spark, warehouse, tmp_path):
         right_ts="date_parsed",
         left_by="join_key",
         right_by="join_key",
-        left_id="comment_id",
     )
     rows = enriched.select("comment_date", "page_views").collect()
     for r in rows:

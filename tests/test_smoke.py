@@ -41,6 +41,18 @@ def test_catalog_registers_the_named_function():
     assert not mismatched
 
 
+def test_queries_md_matches_catalog():
+    """QUERIES.md is generated from the catalog; a query added, renamed
+    or re-documented without `python docs_queries.py` leaves it stale."""
+    import os
+
+    import docs_queries
+
+    path = os.path.join(os.path.dirname(docs_queries.__file__), "QUERIES.md")
+    with open(path) as fh:
+        assert fh.read() == docs_queries.render()
+
+
 def test_load_table_schema_cache(spark):
     """The r12 schema cache: the second load of a path must take the
     explicit-schema fast path and produce an identical schema AND

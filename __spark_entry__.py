@@ -15,6 +15,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from data_engineering_individual_assignment_spark import plans
+from data_engineering_individual_assignment_spark.operators.dedup import (
+    release_intermediates,
+)
 from data_engineering_individual_assignment_spark.session import tune_for_oracle
 
 
@@ -29,6 +32,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # the caller materializes a query after run() returns, so the
+            # previous query's cached intermediates are released here,
+            # before the next one is built
+            release_intermediates()
             tune_for_oracle(spark)  # UTC session TZ for oracle comparison
             return fn(spark, sf_dir)
 

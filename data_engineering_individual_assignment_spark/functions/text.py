@@ -1,5 +1,5 @@
 """Text-analysis column functions for the LLM-data-pipeline extensions
-(SURVEY §2.11): tokenization, language ID heuristic, quality scoring,
+(SURVEY §2.11): tokenization, stopword ratio, quality scoring,
 fingerprinting, shingling.
 
 All pure Column expressions (no Python UDFs) so they run inside
@@ -59,11 +59,6 @@ def stopword_count(c: Column | str) -> Column:
 def stopword_ratio(c: Column | str) -> Column:
     n = token_count(c)
     return F.when(n > 0, stopword_count(c) / n).otherwise(F.lit(0.0))
-
-
-def is_english_guess(c: Column | str, min_ratio: float = 0.08) -> Column:
-    """Language-ID heuristic: English iff stopword ratio >= min_ratio."""
-    return (stopword_ratio(c) >= F.lit(min_ratio)).cast("int")
 
 
 def punct_ratio(c: Column | str) -> Column:

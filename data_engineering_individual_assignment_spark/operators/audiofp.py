@@ -337,7 +337,8 @@ def audio_near_dup_pairs(
     skipped — the documented trade on degenerate corpora; keys that
     common carry no discriminative signal (a silence frame matches
     every silent doc).  ``None`` disables the guard."""
-    assert probe_bits in (0, 1), "probe_bits > 1 explodes 529x; use 0 or 1"
+    if probe_bits not in (0, 1):
+        raise ValueError("probe_bits > 1 explodes 529x; use 0 or 1")
     from .dedup import _persist
 
     # the slim (id, frame, int32) relation feeds FOUR plan branches

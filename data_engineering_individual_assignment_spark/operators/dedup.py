@@ -21,7 +21,7 @@ import weakref
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, shingles, tokens
+from ..functions.text import fingerprint, tokens
 
 # Persisted intermediates (the shingle relation feeds both the candidate
 # and the verification subtree, so it must stay cached until the caller
@@ -145,15 +145,6 @@ def drop_exact_dups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # --------------------------------------------------------------------------
-def doc_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame:
-    """(doc_id, shingles) string arrays with empty-shingle docs dropped.
-    Readable/debuggable form; the join operators below use the hashed
-    row form instead (higher-order functions don't codegen)."""
-    return _spread(df).select(
-        F.col(id_col).alias("doc_id"), shingles(text_col, k).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
 def _gram_structs(
     df: DataFrame, text_col: str, id_col: str, k: int, distinct: bool = False
 ) -> DataFrame:
@@ -570,7 +561,11 @@ def near_dup_minhash(
     threshold 0.7 with 24 hashes that's b=6, r=4: recall 0.96 at j=0.8,
     0.9996 at j=0.9, while unrelated pairs (j~0.1) collide with p~6e-4 —
     r is the skew/false-candidate knob on a low-entropy corpus.
-    ``jaccard_join`` is the exact variant.
+    ``jaccard_join`` is the exact variant.  No catalog query serves
+    this xxhash64 form (the catalog's ``near_dup_minhash`` replays the
+    md5 ``near_dup_minhash_portable``), but it returns the same rows
+    faster: 2.00 vs 2.29 s at sf0.1, 6.99 vs 9.85 s at a 10x replica
+    (medians, 4 cores).
     """
     if num_bands is None or rows_per_band is None:
         num_bands, rows_per_band = choose_bands(threshold, num_hashes)
@@ -660,7 +655,6 @@ def minhash_portable(
     id_col: str,
     num_hashes: int = 4,
     k: int = 3,
-    shingle_arrays: DataFrame | None = None,
     shingle_rows: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, mh0..mh{n-1}) MinHash signature with md5-derived hash
@@ -669,17 +663,12 @@ def minhash_portable(
     slots via the (a_i*x + b_i) mod P universal family (see _mh_coeffs);
     the xxhash64 variant (minhash_signatures) is the faster
     non-portable production path.  Pass ``shingle_rows`` (a
-    ``shingle_string_rows`` relation) or ``shingle_arrays`` (a
-    ``doc_shingles`` relation) to reuse an already-built one."""
-    if shingle_rows is not None:
-        rows = shingle_rows
-    elif shingle_arrays is not None:
-        rows = shingle_arrays.select("doc_id", F.explode("shingles").alias("sh"))
-    else:
-        rows = shingle_string_rows(df, text_col, id_col, k)
+    ``shingle_string_rows`` relation) to reuse an already-built one."""
+    if shingle_rows is None:
+        shingle_rows = shingle_string_rows(df, text_col, id_col, k)
     x = _md5_hash60(F.col("sh")) % F.lit(_MH_FOLD)
     coeffs = _mh_coeffs(num_hashes)
-    hashed = rows.select(
+    hashed = shingle_rows.select(
         "doc_id",
         *[
             ((F.lit(a) * x + F.lit(b)) % F.lit(_MH_PRIME)).alias(f"mh{i}")
@@ -689,29 +678,6 @@ def minhash_portable(
     return hashed.groupBy("doc_id").agg(
         *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(num_hashes)]
     )
-
-
-def simhash_portable(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
-    """(doc_id, simhash) with md5-derived token hashes and ``bits``-bit
-    signatures — engine-portable for oracle checking (the 64-bit
-    xxhash64 variant below is the production path)."""
-    tok = _spread(df).select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("tok")
-    ).withColumn("h", _md5_hash60(F.col("tok")))
-    bit_sums = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(bits)
-        ]
-    )
-    sim = F.lit(0).cast("bigint")
-    for b in range(bits):
-        sim = sim + F.when(
-            F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("bigint"), b)
-        ).otherwise(F.lit(0).cast("bigint"))
-    return bit_sums.select("doc_id", sim.alias("simhash"))
 
 
 def near_dup_minhash_portable(
@@ -731,9 +697,11 @@ def near_dup_minhash_portable(
     any engine with md5, so the WHOLE LSH pipeline is differential-
     testable, not just its recall.  Same banding math and scale shape
     as ``near_dup_minhash`` (bucket equi-join; shuffles carry
-    signatures, never documents); md5 costs ~4x xxhash64 per shingle,
-    which is the price of oracle-checkability — use the xxhash64
-    variant when nothing external needs to reproduce the buckets.
+    signatures, never documents).  md5 is the price of oracle-
+    checkability: with identical rows this took 2.29 vs 2.00 s at sf0.1
+    and 9.85 vs 6.99 s at a 10x replica (medians, 4 cores) against the
+    xxhash64 ``near_dup_minhash`` — use that one when nothing external
+    needs to reproduce the buckets.
 
     Returns (doc_a, doc_b, jaccard) for verified candidates, exact
     word-shingle Jaccard >= threshold, doc_a < doc_b.
@@ -808,28 +776,50 @@ def near_dup_minhash_portable(
     )
 
 
-def simhash_near_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bits: int = 60,
-    num_bands: int = 4,
+# --------------------------------------------------------------------------
+# SimHash
+# --------------------------------------------------------------------------
+def _simhash(
+    df: DataFrame, text_col: str, id_col: str, token_hash, bits: int
 ) -> DataFrame:
-    """SimHash near-dup candidates with ENGINE-PORTABLE signatures:
-    60-bit md5-derived token hashes (``simhash_portable``) banded into
-    4 x 15-bit keys (pigeonhole: hamming <= 3 pairs agree on >= 1 full
-    band), bucket equi-join, exact hamming verify via bit_count(xor).
-    Every hash is md5-derived, so candidates AND hamming distances are
-    bit-identical across engines — the xxhash64 64-bit variant
-    (``simhash_near_pairs``) is the cheaper production path.
+    """(doc_id, simhash:bigint) over whitespace tokens hashed with
+    ``token_hash``: per bit, sum +1/-1 across token hashes, sign -> bit.
+    One explode + one groupBy of ``bits`` conditional sums (all codegen;
+    one shuffle on doc_id)."""
+    tok = _spread(df).select(
+        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("tok")
+    ).withColumn("h", token_hash(F.col("tok")))
+    bit_sums = tok.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+            ).alias(f"b{b}")
+            for b in range(bits)
+        ]
+    )
+    sim = F.lit(0).cast("bigint")
+    for b in range(bits):
+        sim = sim + F.when(
+            F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("bigint"), b)
+        ).otherwise(F.lit(0).cast("bigint"))
+    return bit_sums.select("doc_id", sim.alias("simhash"))
 
-    Returns (doc_a, doc_b, hamming:int) with doc_a < doc_b.
-    """
-    assert bits % num_bands == 0
+
+def simhash_portable(df: DataFrame, text_col: str, id_col: str, bits: int = 16) -> DataFrame:
+    """(doc_id, simhash) with md5-derived token hashes and ``bits``-bit
+    signatures (``bits`` <= 60, the width of ``_md5_hash60``) —
+    engine-portable, so the signatures are oracle-checkable."""
+    return _simhash(df, text_col, id_col, _md5_hash60, bits)
+
+
+def _simhash_pairs(
+    sims: DataFrame, max_hamming: int, bits: int, num_bands: int
+) -> DataFrame:
+    """Band ``bits``-bit signatures into ``num_bands`` keys (pigeonhole:
+    pairs within hamming < num_bands agree on >= 1 full band), bucket
+    equi-join, exact hamming verify via bit_count(xor)."""
     band_bits = bits // num_bands
     mask = (1 << band_bits) - 1
-    sims = simhash_portable(df, text_col, id_col, bits=bits)
     bands = sims.select(
         "doc_id",
         "simhash",
@@ -867,76 +857,48 @@ def simhash_near_pairs_portable(
     )
 
 
-# --------------------------------------------------------------------------
-# SimHash
-# --------------------------------------------------------------------------
-def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash over whitespace tokens: per bit, sum +1/-1 across
-    token hashes, sign -> bit.  Computed as an explode + 1 groupBy with 64
-    conditional-sum aggregates (all codegen; one shuffle on doc_id).
-    Returns (doc_id, simhash:bigint)."""
-    tok = _spread(df).select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
-    bit_sums = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(64)
-        ]
-    )
-    sim = F.lit(0).cast("bigint")
-    for b in range(64):
-        sim = sim + F.when(
-            F.col(f"b{b}") > 0, F.shiftleft(F.lit(1).cast("bigint"), b)
-        ).otherwise(F.lit(0).cast("bigint"))
-    return bit_sums.select("doc_id", sim.alias("simhash"))
+def simhash_near_pairs_portable(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int = 3,
+    bits: int = 60,
+    num_bands: int = 4,
+) -> DataFrame:
+    """SimHash near-dup candidates with ENGINE-PORTABLE signatures:
+    60-bit md5-derived token hashes (``simhash_portable``) banded into
+    4 x 15-bit keys (pigeonhole: hamming <= 3 pairs agree on >= 1 full
+    band), bucket equi-join, exact hamming verify via bit_count(xor).
+    Every hash is md5-derived, so candidates AND hamming distances are
+    bit-identical across engines.  At sf0.01-0.1 it is as fast as the
+    xxhash64 twin ``simhash_near_pairs``; at a 10x replica the twin's
+    16-bit bands win (see there).
+
+    Returns (doc_a, doc_b, hamming:int) with doc_a < doc_b.
+    """
+    if bits % num_bands:
+        raise ValueError("num_bands must divide bits")
+    sims = simhash_portable(df, text_col, id_col, bits=bits)
+    return _simhash_pairs(sims, max_hamming, bits, num_bands)
 
 
 def simhash_near_pairs(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
-    """Near-dup candidates by SimHash: band the 64 bits into 4×16-bit
-    keys (pigeonhole: hamming<=3 pairs share >=1 exact band), equi-join on
-    bands, verify true hamming distance with bit_count(xor)."""
-    sims = simhash64(df, text_col, id_col)
-    bands = sims.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("simhash", i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    pairs = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs
+    """Near-dup candidates by 64-bit xxhash64 SimHash banded into 4x16-bit
+    keys (pigeonhole: hamming <= 3 pairs share >= 1 exact band).  Not
+    oracle-checkable, and no catalog query serves it; it stays because
+    it wins at scale.  Interleaved medians on 4 cores against
+    ``simhash_near_pairs_portable``: 2.48 vs 2.26 s at sf0.01, 2.77 vs
+    2.69 s at sf0.1, but 4.60 vs 5.48 s at a 10x replica (5 of 5 pairs;
+    a second, noisier session gave 7.96 vs 12.25 s, again 5 of 5).
+    The two differ in more than the hash: 16-bit bands against 15-bit
+    ones, and at 10x 6,021 against 13,408 verified pairs.
+
+    Returns (doc_a, doc_b, hamming:int) with doc_a < doc_b.
+    """
+    sims = _simhash(df, text_col, id_col, F.xxhash64, 64)
+    return _simhash_pairs(sims, max_hamming, 64, 4)
 
 
 # --------------------------------------------------------------------------
@@ -979,6 +941,13 @@ def contamination_pairs(
     the explode — no corpus shuffle, and stateless so the same operator
     serves the streaming twin), so count(*) over the matched rows is the
     distinct shared-gram count.
+
+    No Bloom prefilter sits in front of the join: the broadcast hash
+    join's probe already is a hash-set membership test.  A literal-
+    bitset Bloom filter (one collect of the benchmark hashes to build,
+    five xxhash64 per corpus shingle to probe) returned the same rows
+    but was slower at every scale on 4 cores: 2.02/2.93/6.51 s against
+    0.87/0.94/4.22 s (medians) at sf0.01, sf0.1 and a 10x replica.
     """
     return (
         _contamination_side(corpus, text_col, id_col, k, "doc_id")
@@ -1100,92 +1069,3 @@ def pair_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             "component diameter > 2^rounds; raise max_iter"
         )
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-# --------------------------------------------------------------------------
-# Bloom-filter prefilter (runtime-filter pattern, pure JVM expressions)
-# --------------------------------------------------------------------------
-def bloom_membership(
-    small_hashes: DataFrame,
-    hash_col: str,
-    probe_col,
-    n_hash: int = 5,
-    bits_per_item: int = 16,
-):
-    """Build a Bloom filter over ``small_hashes[hash_col]`` (int64) and
-    return a Column testing ``probe_col`` membership — the runtime-filter
-    pattern with the bitset inlined as a literal array, evaluated inside
-    whole-stage codegen (getbit + shifts; no UDF, no Python boundary).
-
-    The small side is collected ONCE as bit positions (n_items × n_hash
-    ints — by contract a benchmark/eval set, KBs against a 100 TB
-    corpus).  m is a power of two at ~bits_per_item per item: ~0.6% fp
-    rate at 16 bits/5 hashes.  False positives only — callers must
-    verify candidates exactly; false negatives are impossible, so a
-    bloom-prefiltered exact operator returns identical results.
-    """
-    # ONE job: collect the n_hash raw probe hashes per distinct item and
-    # size m afterwards — Python's % on a positive modulus matches
-    # Spark's pmod, so reducing driver-side is exact.  (The previous
-    # two-job shape — a distinct().count() to size m, then a second
-    # pass for positions — recomputed the whole small-side subtree
-    # twice; measured ~3.1 s → ~0.7 s of the contamination_bloom
-    # constant at sf0.1.)
-    rows = (
-        small_hashes.select(hash_col)
-        .distinct()
-        .select(*[F.xxhash64(F.col(hash_col), F.lit(i)) for i in range(n_hash)])
-        .collect()
-    )
-    n_items = len(rows)
-    m = 64
-    while m < n_items * bits_per_item:
-        m *= 2
-    words = [0] * (m // 64)
-    for r in rows:
-        for h in r:
-            p = h % m
-            words[p >> 6] |= 1 << (p & 63)
-    # int64 two's complement for the Spark literal
-    longs = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    bitset = F.array(*[F.lit(w).cast("long") for w in longs])
-
-    test = None
-    for i in range(n_hash):
-        pos = F.pmod(F.xxhash64(probe_col, F.lit(i)), F.lit(m)).cast("long")
-        elem = F.element_at(bitset, (F.shiftright(pos, 6) + 1).cast("int"))
-        bit = pos.bitwiseAND(F.lit(63)).cast("int")
-        t = F.call_function("getbit", elem, bit) == 1
-        test = t if test is None else (test & t)
-    return test
-
-
-def contamination_pairs_bloom(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    min_shared: int = 3,
-) -> DataFrame:
-    """``contamination_pairs`` with a BLOOM PREFILTER on the corpus
-    shingle stream: the benchmark's shingle hashes become a literal
-    bitset; corpus shingles failing the membership test are dropped
-    BEFORE the join.  At 100 TB this is the runtime-filter shape that
-    keeps the join input proportional to the contaminated volume (vs
-    the full exploded corpus); the exact equi-join afterwards removes
-    bloom false positives, so results are identical to the unfiltered
-    operator.
-    """
-    bench = _contamination_side(benchmark, text_col, id_col, k, "bench_id")
-    member = bloom_membership(
-        bench.select("shingle_h").distinct(), "shingle_h", F.col("shingle_h")
-    )
-    return (
-        _contamination_side(corpus, text_col, id_col, k, "doc_id")
-        .filter(member)
-        .join(F.broadcast(bench), "shingle_h")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count("*").cast("bigint").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )

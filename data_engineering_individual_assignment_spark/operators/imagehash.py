@@ -339,13 +339,15 @@ def phash_near_pairs(
     prepends them to the output — with the default empty tuple the
     plan is byte-identical to the ungrouped form.
     """
-    assert 64 % num_bands == 0, "num_bands must divide 64"
+    if 64 % num_bands:
+        raise ValueError("num_bands must divide 64")
     band_bits = 64 // num_bands
     radius = max_hamming // num_bands
-    assert radius <= 1, (
-        f"max_hamming={max_hamming} with {num_bands} bands needs probe "
-        f"radius {radius}; use more bands or a wider hash"
-    )
+    if radius > 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} with {num_bands} bands needs probe "
+            f"radius {radius}; use more bands or a wider hash"
+        )
     mask = (1 << band_bits) - 1
     gcols = list(group_cols)
     from .dedup import _persist

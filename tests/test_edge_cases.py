@@ -3,6 +3,7 @@ rows — operators must not throw or silently mis-shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -277,3 +278,38 @@ def test_triangle_stats_on_empty_and_single_edge(spark):
     one = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     r = triangle_stats(one).first()
     assert (r.n_edges, r.n_triangles, r.n_wedges) == (1, 0, 0)
+
+
+@pytest.mark.parametrize(
+    "module, name, kw, message",
+    [
+        (
+            "dedup",
+            "simhash_near_pairs_portable",
+            {"text_col": "text", "id_col": "doc_id", "bits": 60, "num_bands": 7},
+            "num_bands must divide bits",
+        ),
+        ("imagehash", "phash_near_pairs", {"num_bands": 3}, "num_bands must divide 64"),
+        (
+            "imagehash",
+            "phash_near_pairs",
+            {"max_hamming": 8, "num_bands": 4},
+            "probe radius 2",
+        ),
+        ("audiofp", "audio_near_dup_pairs", {"probe_bits": 2}, "probe_bits > 1"),
+    ],
+    ids=["simhash_bands", "phash_bands", "phash_radius", "audio_probe_bits"],
+)
+def test_operator_arguments_raise_value_error(module, name, kw, message):
+    """Argument checks are real raises, not asserts that vanish under
+    python -O (seven bands over 60 bits would silently band 56)."""
+    import importlib
+
+    op = getattr(
+        importlib.import_module(
+            f"data_engineering_individual_assignment_spark.operators.{module}"
+        ),
+        name,
+    )
+    with pytest.raises(ValueError, match=message):
+        op(None, **kw)

@@ -196,7 +196,7 @@ def test_phash_near_pairs_matches_brute_force(spark, hash_df):
 
 
 def test_phash_near_pairs_radius2_rejected(hash_df):
-    with pytest.raises(AssertionError, match="probe"):
+    with pytest.raises(ValueError, match="probe"):
         phash_near_pairs(hash_df, max_hamming=8, num_bands=4)
 
 

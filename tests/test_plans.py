@@ -271,26 +271,6 @@ def test_key_skew_profile_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 4
 
 
-def test_contamination_bloom_is_jvm_only_and_equal(spark):
-    """The bloom prefilter must stay pure JVM expressions (no Python
-    eval node) and cannot change results — bloom has false positives
-    only, and the exact join removes them."""
-    from data_engineering_individual_assignment_spark import plans
-
-    plan = _plan(spark, "contamination_bloom", execute=True)
-    assert "EvalPython" not in plan  # no BatchEvalPython / ArrowEvalPython
-    assert "BroadcastHashJoin" in plan
-    a = sorted(
-        tuple(r)
-        for r in plans.CATALOG["contamination_check"].fn(spark, SF_SMALL).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in plans.CATALOG["contamination_bloom"].fn(spark, SF_SMALL).collect()
-    )
-    assert a == b
-
-
 def test_hll_error_within_bounds(spark):
     """The HLL calibration report's measured relative error must sit
     within 3x the configured rsd at both precisions."""

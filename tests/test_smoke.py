@@ -142,3 +142,101 @@ def test_scan_partitions_ignores_column_named_like_tag(spark):
     )
     n = dedup._scan_partitions(df)
     assert isinstance(n, int) and n >= 1
+
+
+def test_queries_release_previous_intermediates(spark):
+    """The queries() wrapper releases the previous query's cached
+    intermediates before it builds the next query, so a long-lived
+    session running the catalog holds at most one query's blocks."""
+    import __spark_entry__ as entrymod
+
+    from .conftest import SF_SMALL
+
+    qs = entrymod.queries()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for name in (
+        "near_dup_pairs",
+        "near_dup_pairs",
+        "video_near_dup_signature",
+        "near_dup_pairs",
+    ):
+        qs[name](spark, SF_SMALL).collect()
+    assert jsc.getPersistentRDDs().size() <= before + 1
+
+
+# Public functions in operators/ and functions/ that no package code,
+# root script or perfbench/ reaches, each with the reason it stays.
+KEEP = {
+    "bpe_apply": "inference side of bpe_train_merges (COVERAGE); the "
+    "train/apply consistency test pins it",
+    "demojize_udf": "reference-parity surface (COVERAGE C4)",
+    "slash_date_to_date": "reference-parity surface: reads C5's warehouse "
+    "dates back (golden-parity test)",
+    "evaluate": "reference-parity surface: evaluate_algorithm (U1)",
+    "exact_random_split": "reference-parity surface: exact-count split (U1)",
+    "exact_median": "test reference for the histogram-refinement median",
+    "simhash_near_pairs": "measured win over simhash_near_pairs_portable: "
+    "4.60 vs 5.48 s at a 10x replica",
+    "subfingerprints": "per-clip test reference for the batched fingerprints",
+    "pq_train": "trained-PQ recall path: recall pins >= 0.4 and >= 0.9 "
+    "that the frozen codebooks cannot give",
+    "pq_topk": "trained-PQ recall path (see pq_train)",
+    "pq_topk_rerank": "trained-PQ recall path (see pq_train)",
+}
+
+
+def test_no_unserved_public_functions():
+    """Every public top-level function in operators/ and functions/ is
+    reached by a call from the package, a root script or perfbench/,
+    directly or through other package functions; tests do not count.
+    Names resolve loosely: an attribute access ``x.f`` reaches every
+    ``f``, a bare name only one defined in or imported into its file."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "data_engineering_individual_assignment_spark"
+    checked = {pkg / "operators", pkg / "functions"}
+    files = [*pkg.rglob("*.py"), *root.glob("*.py"), *root.glob("perfbench/*.py")]
+
+    def refs(node, scope):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                if n.id in scope:
+                    out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.ImportFrom):
+                out.update(a.name for a in n.names)
+        return out
+
+    calls, public, reached = {}, {}, set(KEEP)
+    for f in files:
+        tree = ast.parse(f.read_text())
+        scope = {
+            a.asname or a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+        } | {n.name for n in tree.body if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
+        if f.parent not in checked:
+            reached |= refs(tree, scope)
+            continue
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                calls.setdefault(node.name, set()).update(refs(node, scope) - {node.name})
+                if not node.name.startswith("_"):
+                    public[node.name] = f"{f.relative_to(root)}:{node.lineno}"
+            else:
+                reached |= refs(node, scope)
+    todo = list(reached)
+    while todo:
+        for name in calls.get(todo.pop(), ()):
+            if name not in reached:
+                reached.add(name)
+                todo.append(name)
+    assert set(KEEP) <= set(public), set(KEEP) - set(public)
+    unserved = {name: public[name] for name in set(public) - reached}
+    assert not unserved, unserved

@@ -6,8 +6,9 @@ JSON line ($SPARK_GRAFT_CPUS defaults to the cores this process may use):
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``value`` is the total wall-clock of the headline suite.  Each query is
-forced with a cheap count() action after a fresh plan build, so the
-number reflects scan+plan+execute, not cached results.
+forced by a write to the noop sink after a fresh plan build, which
+computes every output column (a count() would let Catalyst prune them),
+so the number reflects scan+plan+execute, not cached results.
 """
 
 from __future__ import annotations

@@ -30,6 +30,49 @@ def _col(c: Column | str) -> Column:
 TOKS_SQL = r"regexp_split_to_array(trim(lower(text)), '\s+')"
 
 
+def shingles_sql(source: str = "documents") -> str:
+    """WITH-clause fragment for the DuckDB oracles that shingle text:
+    ``sh(doc_id, shingles)``, the distinct word 3-shingles of every doc
+    with at least 3 tokens.  ``source`` is any relation with ``doc_id``
+    and ``text`` columns.  MATERIALIZED because DuckDB otherwise
+    re-evaluates a CTE at every reference."""
+    return rf"""sh AS MATERIALIZED (
+        SELECT doc_id,
+               list_distinct([
+                   array_to_string(toks[i:i+2], ' ')
+                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
+               ]) AS shingles
+        FROM (SELECT doc_id, {TOKS_SQL} AS toks FROM {source})
+        WHERE len(toks) >= 3)"""
+
+
+def shingle_pairs_sql(threshold: float, source: str = "documents") -> str:
+    """WITH-clause fragment for the DuckDB oracles of the near-dup family:
+    ``sh`` from :func:`shingles_sql` and ``pairs(doc_a, doc_b, j)``, every
+    pair with exact 3-shingle Jaccard ``j >= threshold`` (``doc_a < doc_b``).
+
+    Pairs come from an inverted-index self-join: unnest the shingles,
+    equi-join on the shingle, count shared shingles per pair, and divide
+    by the union size ``n_a + n_b - shared``.  A pair that shares no
+    shingle has J = 0, so for a positive threshold skipping those pairs
+    is exact; ``threshold <= 0`` raises.  ``pairs`` is MATERIALIZED
+    like ``sh``."""
+    if not threshold > 0:
+        raise ValueError(f"threshold must be > 0, got {threshold!r}")
+    return rf"""{shingles_sql(source)},
+    pairs AS MATERIALIZED (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*)) AS j
+        FROM (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s
+              FROM sh) a
+        JOIN (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s
+              FROM sh) b
+          ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id, a.n, b.n
+        HAVING CAST(count(*) AS DOUBLE) / (a.n + b.n - count(*))
+               >= {threshold!r})"""
+
+
 def tokens(c: Column | str) -> Column:
     """Whitespace tokenization of lower-cased text -> array<string>.
     Trim first so no empty leading/trailing tokens appear (keeps Spark and

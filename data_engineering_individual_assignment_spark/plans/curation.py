@@ -314,17 +314,8 @@ def pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared by contamination_check and contamination_bloom, which is served
 # by contamination_check
-_CONTAMINATION_ORACLE_SQL = r"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3)
+_CONTAMINATION_ORACLE_SQL = rf"""
+    WITH {TX.shingles_sql()}
     SELECT c.doc_id AS doc_id, b.doc_id AS bench_id,
            CAST(len(list_intersect(c.shingles, b.shingles)) AS BIGINT) AS n_shared
     FROM sh c JOIN sh b ON c.doc_id >= 20 AND b.doc_id < 20
@@ -653,22 +644,8 @@ def perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_quality_survivors",
-    sql=r"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7),
+    sql=f"""
+    WITH RECURSIVE {TX.shingle_pairs_sql(0.7)},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION
@@ -726,17 +703,8 @@ def dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ngram_novelty",
-    sql=r"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
+    sql=rf"""
+    WITH {TX.shingles_sql()},
     rows_ AS (
         SELECT doc_id, unnest(shingles) AS g FROM sh),
     df_ AS (
@@ -1318,7 +1286,7 @@ def _span_surviving(toks, dp):
 
 @register(
     "dedup_pipeline_roi",
-    sql=r"""
+    sql=rf"""
     WITH RECURSIVE raw0 AS (
         SELECT doc_id, text,
                regexp_split_to_array(trim(lower(text)), '\s+') AS toks,
@@ -1332,7 +1300,7 @@ def _span_surviving(toks, dp):
                CAST('0x' || substr(md5('dspan|' ||
                     array_to_string(toks[u.i : u.i + 7], ' ')), 1, 15)
                     AS BIGINT) AS h
-        FROM e, unnest([{'i': i}
+        FROM e, unnest([{{'i': i}}
                         for i in range(1, len(toks) - 7 + 1)]) AS v(u)
         WHERE len(toks) >= 8),
     dupg AS (
@@ -1354,20 +1322,8 @@ def _span_surviving(toks, dp):
                       if len([p for p in dp
                               if p <= i AND i <= p + 7]) = 0] AS stoks
               FROM per)),
-    sh AS (
-        SELECT doc_id, list_distinct([
-                   array_to_string(t2[i:i+2], ' ')
-                   for i in range(1, greatest(len(t2) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(rew_text)), '\s+') AS t2
-              FROM rtext)
-        WHERE len(t2) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7),
+    {TX.shingle_pairs_sql(
+        0.7, source="(SELECT doc_id, rew_text AS text FROM rtext)")},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION
@@ -1456,8 +1412,8 @@ def _span_surviving(toks, dp):
     "propagation).  Scale: every stage is a digest-keyed aggregate or "
     "an equi-join; stage boundaries persist only the skinny (doc_id, "
     "tokens) relations each next stage actually re-reads; nothing "
-    "quadratic anywhere (the oracle's all-pairs jaccard is the "
-    "DuckDB replay, not the plan).",
+    "quadratic anywhere (the oracle's exact Jaccard via an "
+    "inverted-index self-join is the DuckDB replay, not the plan).",
 )
 def dedup_pipeline_roi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup

@@ -543,29 +543,11 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Triangle census over the exact near-dup graph
 # ---------------------------------------------------------------------------
-_EDGES_CTE = r"""
-    sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
-    edges AS (
-        SELECT a.doc_id AS a, b.doc_id AS b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7)
-"""
-
-
 @register(
     "triangle_census_near_dup",
     sql=f"""
-    WITH {_EDGES_CTE},
+    WITH {TX.shingle_pairs_sql(0.7)},
+    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs),
     deg AS (
         SELECT v, CAST(count(*) AS BIGINT) AS deg
         FROM (SELECT a AS v FROM edges UNION ALL SELECT b AS v FROM edges)
@@ -675,8 +657,11 @@ def _peel_round_cte(i: int) -> str:
 # length ~32 (chains peel from both ends); near-dup graphs are
 # near-cliques whose appendages peel in 1-3 rounds.
 _PEEL_DEPTH = 16
+_PEEL_ROUNDS = ",\n    ".join(
+    _peel_round_cte(i) for i in range(1, _PEEL_DEPTH + 1)
+)
 _TWO_CORE_SQL = f"""
-    WITH {{NEAR_DUP_PAIRS_CTES}},
+    WITH {TX.shingle_pairs_sql(0.7)},
     edges AS MATERIALIZED (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION ALL
@@ -684,7 +669,7 @@ _TWO_CORE_SQL = f"""
     nodes AS MATERIALIZED (SELECT DISTINCT a AS node FROM edges),
     rem0 AS MATERIALIZED (
         SELECT a AS node FROM edges GROUP BY a HAVING count(*) < 2),
-    {{PEEL_ROUNDS}},
+    {_PEEL_ROUNDS},
     survivors AS MATERIALIZED (
         SELECT node FROM nodes
         WHERE node NOT IN (SELECT node FROM rem{_PEEL_DEPTH})),
@@ -706,20 +691,9 @@ _TWO_CORE_SQL = f"""
     """
 
 
-def _two_core_oracle_sql() -> str:
-    from .extensions import NEAR_DUP_PAIRS_CTES
-
-    return _TWO_CORE_SQL.format(
-        NEAR_DUP_PAIRS_CTES=NEAR_DUP_PAIRS_CTES,
-        PEEL_ROUNDS=",\n    ".join(
-            _peel_round_cte(i) for i in range(1, _PEEL_DEPTH + 1)
-        ),
-    )
-
-
 @register(
     "near_dup_2core",
-    sql=_two_core_oracle_sql(),
+    sql=_TWO_CORE_SQL,
     doc="2-core of the jaccard near-dup graph (operators/graph.k_core, "
     "iterative peeling with per-round localCheckpoint): the maximal "
     "subgraph where every doc keeps >= 2 near-dup neighbors — "

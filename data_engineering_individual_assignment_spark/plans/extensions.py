@@ -2,7 +2,8 @@
 operators (as-of join, sessionization, event-time windows).
 
 Oracle notes: near-dup verification is exact Jaccard, so the DuckDB
-oracle is a literal all-pairs Jaccard — LSH only prunes candidates and
+oracle computes exact Jaccard via an inverted-index self-join
+(functions/text.shingle_pairs_sql) — LSH only prunes candidates and
 its recall at the 0.7 threshold is 1-(1-0.7)^12 ≈ 1-3e-7 (see
 operators/dedup.py).  SimHash and IVF are engine-specific (xxhash64 /
 approximate recall) and are registered without oracle => the driver
@@ -66,30 +67,17 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "near_dup_pairs",
-    sql=r"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                 / len(list_distinct(list_concat(a.shingles, b.shingles))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-          / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7
+    sql=f"""
+    WITH {TX.shingle_pairs_sql(0.7)}
+    SELECT doc_a, doc_b, round(j, 6) AS jaccard
+    FROM pairs
     ORDER BY doc_a, doc_b
     """,
     doc="EXACT near-duplicate pairs (3-shingle Jaccard >= 0.7) via "
     "prefix-filtered set-similarity join (Vernica et al. 2010): global "
     "rare-first shingle ordering, prefix+length filters, verify "
-    "candidates only. Matches the brute-force all-pairs oracle with "
-    "near-linear work — the 100 TB-safe exact path.",
+    "candidates only, with near-linear work — the 100 TB-safe exact "
+    "path. Oracle: exact Jaccard via an inverted-index self-join.",
 )
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -121,16 +109,7 @@ _LSH_BAND_STRUCTS = ",\n                   ".join(
 @register(
     "near_dup_minhash",
     sql=rf"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
+    WITH {TX.shingles_sql()},
     sigs AS (
         SELECT doc_id,
                {_LSH_SIG_TERMS}
@@ -178,16 +157,7 @@ def near_dup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lsh_ingest_near_dup",
     sql=rf"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
+    WITH {TX.shingles_sql()},
     sigs AS (
         SELECT doc_id,
                {_LSH_SIG_TERMS}
@@ -287,23 +257,7 @@ _EST_AGREE = " + ".join(
 @register(
     "minhash_estimate_accuracy",
     sql=rf"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-               / len(list_distinct(list_concat(a.shingles, b.shingles))) AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.5),
+    WITH {TX.shingle_pairs_sql(0.5)},
     sigs AS (
         SELECT doc_id,
                {_EST_SIG_TERMS}
@@ -383,16 +337,7 @@ _MH_TERMS = _mh_sql_terms(4)
 @register(
     "minhash_portable_sigs",
     sql=rf"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3)
+    WITH {TX.shingles_sql()}
     SELECT doc_id,
            {_MH_TERMS}
     FROM sh
@@ -1421,27 +1366,8 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# WITH-clause fragment building the exact Jaccard>=0.7 pair graph --
-# shared by the cluster oracles here and the 2-core oracle in
-# plans/diagnostics.py, so the pair semantics cannot drift between them
-NEAR_DUP_PAIRS_CTES = r"""sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7)"""
-
 _CLUSTERS_ORACLE_SQL = f"""
-    WITH RECURSIVE {NEAR_DUP_PAIRS_CTES},
+    WITH RECURSIVE {TX.shingle_pairs_sql(0.7)},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION
@@ -1503,22 +1429,8 @@ def _pagerank_iter_cte(i: int) -> str:
 
 
 _PAGERANK_SQL = (
-    r"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7),
+    f"""
+    WITH {TX.shingle_pairs_sql(0.7)},
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION
@@ -1687,22 +1599,8 @@ def top_doc_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "recursive_multi_hop",
-    sql=r"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM documents)
-        WHERE len(toks) >= 3),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.7),
+    sql=f"""
+    WITH RECURSIVE {TX.shingle_pairs_sql(0.7)},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION ALL
@@ -2129,21 +2027,7 @@ def _cross_modal_domains(
         UNION ALL
         SELECT vec_id + 3000000000, embedding::DOUBLE[]
         FROM embeddings WHERE vec_id >= 10 AND vec_id < 15),
-    sh AS (
-        SELECT doc_id, list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS toks
-              FROM txts)
-        WHERE len(toks) >= 3),
-    tp AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles)))
-              >= 0.7),
+    {TX.shingle_pairs_sql(0.7, source="txts")},
     cm_planes AS (
         SELECT p.plane, d.dim,
                CASE WHEN CAST('0x' || substr(md5(
@@ -2181,7 +2065,7 @@ def _cross_modal_domains(
                     THEN 'both'
                     WHEN t.doc_a IS NOT NULL THEN 'text_only'
                     ELSE 'embedding_only' END AS class
-        FROM tp t FULL OUTER JOIN ep e2
+        FROM pairs t FULL OUTER JOIN ep e2
           ON t.doc_a = e2.doc_a AND t.doc_b = e2.doc_b),
     sfp AS (
         SELECT class, doc_a % 64 AS shard, count(*) AS n,

@@ -1405,34 +1405,19 @@ _DTC_TH_LIST = ", ".join(str(t) for t in _DTC_THRESHOLDS)
 @register(
     "dedup_threshold_curve",
     sql=rf"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct([
-                   array_to_string(toks[i:i+2], ' ')
-                   for i in range(1, greatest(len(toks) - 2, 1) + 1)
-               ]) AS shingles
-        FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
-        WHERE len(toks) >= 3),
-    pairs AS MATERIALIZED (
-        -- referenced by pc AND dc; unmaterialized, DuckDB would run the
-        -- all-pairs Jaccard twice
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-                     / len(list_distinct(list_concat(a.shingles, b.shingles))),
-                     6) AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.shingles, b.shingles)))
-              >= 0.5),
+    WITH {TX.shingle_pairs_sql(0.5)},
+    -- the thresholds are compared against the 6-dp score, as in the
+    -- Spark plan, so a j of 0.6999996 cannot change sides at 0.7
+    pr AS (SELECT doc_a, doc_b, round(j, 6) AS j FROM pairs),
     th AS (SELECT unnest([{_DTC_TH_LIST}]) AS threshold),
     pc AS (
         SELECT th.threshold, CAST(count(*) AS BIGINT) AS n_pairs
-        FROM th JOIN pairs p ON p.j >= th.threshold
+        FROM th JOIN pr p ON p.j >= th.threshold
         GROUP BY th.threshold),
     dc AS (
         SELECT threshold, CAST(count(DISTINCT d) AS BIGINT) AS n_docs_affected
         FROM (SELECT th.threshold, unnest([p.doc_a, p.doc_b]) AS d
-              FROM th JOIN pairs p ON p.j >= th.threshold)
+              FROM th JOIN pr p ON p.j >= th.threshold)
         GROUP BY threshold)
     SELECT th.threshold,
            coalesce(pc.n_pairs, 0) AS n_pairs,
@@ -1446,9 +1431,10 @@ _DTC_TH_LIST = ", ".join(str(t) for t in _DTC_THRESHOLDS)
     "candidate relation is computed once; the curve is a 5-key "
     "broadcast-threshold regrouping of its exact Jaccard scores).  The "
     "choose-your-threshold ROI readout every dedup deployment needs "
-    "before committing to a cutoff.  Oracle = brute-force all-pairs "
-    "Jaccard histogrammed identically (6-dp-rounded scores compared on "
-    "both sides so the bucket edges cannot disagree).",
+    "before committing to a cutoff.  Oracle = exact Jaccard via an "
+    "inverted-index self-join, histogrammed identically (6-dp-rounded "
+    "scores compared on both sides so the bucket edges cannot "
+    "disagree).",
 )
 def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup

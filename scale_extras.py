@@ -32,14 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-
-def steal() -> int | None:
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        return int(parts[8]) if parts[0] == "cpu" and len(parts) > 8 else None
-    except (OSError, ValueError, IndexError):
-        return None
+from bench import _steal_jiffies as steal  # noqa: E402
 
 
 def wide_piece_table(n_pieces: int = 32_768) -> dict[str, int]:
@@ -104,7 +97,7 @@ def main() -> None:
     dst = tempfile.mkdtemp(prefix="dei_extras_")
     report = {}
     try:
-        replicate(spark, src, dst, 10)
+        replicate(spark, src, dst, 10, ("documents", "embeddings"))
         docs_b = load_table(spark, src, "documents")
         docs_x = load_table(spark, dst, "documents")
         _ = run_viterbi(spark, docs_b)  # warm

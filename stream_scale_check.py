@@ -25,32 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from scale_check import replicate  # noqa: E402
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 SRC = "/root/testdata/sf0.1"
-
-
-def replicate_documents(spark, src: str, dst: str, factor: int) -> None:
-    """documents-only replica of scale_check.replicate: key-shifted ids,
-    token-remapped vocabulary per replica (verbatim copies would add
-    factor-1 exact dups per doc and measure output size, not the op)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_individual_assignment_spark.sources.readers import load_table
-
-    df = load_table(spark, src, "documents")
-    parts = []
-    for i in range(factor):
-        part = df.withColumn("doc_id", F.col("doc_id") + F.lit(i * 1_000_000))
-        if i > 0:
-            part = part.withColumn(
-                "text", F.regexp_replace("text", r"(\S+)", f"$1x{i}")
-            )
-        parts.append(part)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    os.makedirs(dst, exist_ok=True)
-    out.write.mode("overwrite").parquet(os.path.join(dst, "documents.parquet"))
 
 
 def check_cms(spark, sf_dir: str, landing: str) -> float:
@@ -296,7 +274,7 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="dei_stream_scale_")
     try:
         big_dir = os.path.join(work, "big")
-        replicate_documents(spark, SRC, big_dir, factor)
+        replicate(spark, SRC, big_dir, factor, ("documents",))
         report = {}
         for name, fn in CHECKS.items():
             fn(spark, SRC, os.path.join(work, f"{name}_warm"))  # warm pass

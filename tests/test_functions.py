@@ -1,9 +1,20 @@
-"""Column-function unit tests: cleaning chain edge cases and the
-demojize import gate."""
+"""Column-function unit tests: cleaning chain edge cases, the
+demojize import gate, and the near-dup family's DuckDB pair-set builder."""
 
 from __future__ import annotations
 
+import itertools
+import re
+
+import pytest
 from pyspark.sql import functions as F
+
+from data_engineering_individual_assignment_spark.functions.text import (
+    shingle_pairs_sql,
+)
+
+from .conftest import SF_SMALL
+from .oracle_utils import duck_con
 
 
 def test_clean_text_two_pass_semantics(spark):
@@ -146,3 +157,73 @@ def test_corpus_fp_agg_plan_is_two_stage(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Aggregate") >= 2
     assert "_fp_shard" in plan
+
+
+def _py_shingle_pairs(docs, threshold):
+    """All-pairs 3-shingle Jaccard in plain Python: the reference the
+    DuckDB builder is pinned against.  DuckDB's trim() strips spaces only."""
+    sh = {}
+    for doc_id, text in docs:
+        toks = re.split(r"\s+", text.lower().strip(" "))
+        if len(toks) >= 3:
+            sh[doc_id] = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    out = {}
+    for a, b in itertools.combinations(sorted(sh), 2):
+        j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+        if j >= threshold:
+            out[(a, b)] = j
+    return out
+
+
+def _builder_pairs(con, threshold, source="documents"):
+    rows = con.execute(
+        f"WITH {shingle_pairs_sql(threshold, source)} "
+        "SELECT doc_a, doc_b, j FROM pairs"
+    ).fetchall()
+    return {(a, b): j for a, b, j in rows}
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.7])
+def test_shingle_pairs_sql_matches_python_all_pairs(threshold):
+    """The inverted-index pair set equals exact all-pairs Jaccard on the
+    sf0.001 corpus: the same pairs and bit-identical j."""
+    con = duck_con(SF_SMALL)
+    docs = con.execute("SELECT doc_id, text FROM documents").fetchall()
+    want = _py_shingle_pairs(docs, threshold)
+    assert want, "the corpus must hold near-dup pairs for this test to bite"
+    assert _builder_pairs(con, threshold) == want
+
+
+def test_shingle_pairs_sql_corner_cases():
+    import duckdb
+
+    t = [f"t{i}" for i in range(1, 11)]
+    docs = [
+        (1, "a b"),                            # < 3 tokens: no shingles
+        (2, "x y z x y z"),                    # repeated trigram: a set
+        (3, "X y  z"),                         # case and spacing fold
+        (4, "the quick brown fox jumps"),
+        (5, "the quick brown fox jumps"),      # identical to 4: J = 1
+        (6, " ".join(t)),                      # 8 shingles
+        (7, " ".join(t[:9] + ["u1", "u2"])),   # 7 shared of 10: J = 0.7
+        (8, "p q r s"),                        # shares no shingle
+        (9, "a b"),                            # short twin of 1: no pair
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", docs)
+
+    got = _builder_pairs(con, 0.7, source="docs")
+    assert got == {(4, 5): 1.0, (6, 7): 0.7}
+    assert got == _py_shingle_pairs(docs, 0.7)
+    # {x y z, y z x, z x y} against {x y z}: set semantics give 1/3
+    low = _builder_pairs(con, 1e-9, source="docs")
+    assert low[(2, 3)] == 1 / 3
+    assert low == _py_shingle_pairs(docs, 1e-9)
+    assert not any(d in p for p in low for d in (1, 8, 9))
+
+
+@pytest.mark.parametrize("threshold", [0, -0.5])
+def test_shingle_pairs_sql_rejects_nonpositive_threshold(threshold):
+    with pytest.raises(ValueError):
+        shingle_pairs_sql(threshold)

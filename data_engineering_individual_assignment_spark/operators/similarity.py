@@ -11,6 +11,12 @@
   queries probe only ``nprobe`` cells.  Centroids here are a
   deterministic sample of the corpus (k-means is a drop-in replacement;
   determinism is required by the test harness).
+- ``pq_encode`` / ``pq_topk`` / ``pq_topk_rerank``: product quantization
+  with asymmetric distance computation (Jégou et al., TPAMI 2011), one
+  engine for both codebook kinds — the md5-frozen books the catalog's
+  oracle replays and ``pq_train``'s sample-trained books.  Vectors
+  (expected L2-normalized) are micro-quantized in the JVM, so every
+  distance after that is exact int64 and ties break on id.
 
 Vector math: the O(pairs) scoring steps use the Arrow-vectorized numpy
 cosine (functions/vectors.cosine_pandas — one block computation per
@@ -169,7 +175,8 @@ def quantize_int8(
 
 def _int_dot(a, b):
     """Exact integer dot product of two long arrays (JVM zip_with +
-    aggregate — stays inside codegen, no UDF)."""
+    aggregate, no UDF; both are CodegenFallback, so it runs
+    interpreted)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -816,6 +823,38 @@ def ivf_topk(
     )
 
 
+# ---------------------------------------------------------------------------
+# Product quantization (Jégou et al., TPAMI 2011): one exact-integer engine
+# ---------------------------------------------------------------------------
+
+PQ_MICRO = 1_000_000  # micro-unit quantization scale (the rrf_micro idiom)
+
+
+def pq_frozen_codebooks(
+    m: int = 8, ncodes: int = 4, sub: int = 8
+) -> list[list[list[int]]]:
+    """md5-derived frozen PQ codebooks in INTEGER micro-units: entry
+    [j][c][d] is ±125000 (±0.125 scaled by PQ_MICRO) with sign from the
+    parity of md5("pqcb|j|c|d") — the pca_projection_check trick applied
+    to PQ.  Any engine with md5 rebuilds the identical constants, and
+    because encode/ADC/rerank are exact integer arithmetic no float
+    drift can flip an argmin, so the catalog's PQ queries replay in
+    DuckDB CTEs and are oracle-checked instead of rows-only.
+    ``pq_train`` returns books in the same format from a corpus sample
+    (recall-tested); these books pin the MECHANISM, not the clustering
+    quality."""
+    import hashlib
+
+    def par(j: int, c: int, d: int) -> int:
+        h = int(hashlib.md5(f"pqcb|{j}|{c}|{d}".encode()).hexdigest()[:15], 16)
+        return 125_000 if h & 1 else -125_000
+
+    return [
+        [[par(j, c, d) for d in range(sub)] for c in range(ncodes)]
+        for j in range(m)
+    ]
+
+
 def pq_train(
     corpus: DataFrame,
     m: int = 8,
@@ -824,16 +863,17 @@ def pq_train(
     sample: int = 2048,
     iters: int = 10,
     id_col: str = "vec_id",
-):
-    """Product-quantization codebooks (Jégou et al., TPAMI 2011): split
-    the (L2-normalized) vector into ``m`` subspaces and run a small
-    seeded Lloyd's k-means per subspace on a BOUNDED training sample —
-    codebook training is O(sample * m * ncodes), independent of corpus
-    size, which is why PQ trains on a driver-side sample even at 100 TB
-    (the encode/score passes below stay fully distributed).
+) -> list[list[list[int]]]:
+    """Product-quantization codebooks: split the (L2-normalized) vector
+    into ``m`` subspaces and run a small seeded Lloyd's k-means per
+    subspace on a BOUNDED training sample — codebook training is
+    O(sample * m * ncodes), independent of corpus size, which is why PQ
+    trains on a driver-side sample even at 100 TB (the encode/score
+    passes below stay fully distributed).
 
-    Returns a [m][ncodes][sub_dim] nested list (plain Python: broadcast-
-    able as a literal, no pickled model object)."""
+    Returns [m][ncodes][sub_dim] ints in PQ_MICRO units, the format of
+    ``pq_frozen_codebooks`` (plain Python: broadcastable as a literal,
+    no pickled model object)."""
     import numpy as np
 
     # orderBy(id).limit = TakeOrdered: the training sample is the same
@@ -859,8 +899,19 @@ def pq_train(
                 mask = assign == c
                 if mask.any():
                     C[c] = S[mask].mean(axis=0)
-        books.append(C.tolist())
+        books.append(np.rint(C * PQ_MICRO).astype("int64").tolist())
     return books
+
+
+def _vec_micro(vec_col):
+    """Quantize a float/double vector to int64 micro-units — identical
+    in DuckDB as list_transform(v::DOUBLE[], x -> CAST(round(x*1000000)
+    AS BIGINT)) (float->double widening is exact in both engines, and
+    both round half away from zero; numpy's round is half-to-even, so
+    the quantization stays in the JVM)."""
+    return F.transform(
+        vec_col, lambda x: F.round(x * F.lit(float(PQ_MICRO))).cast("long")
+    )
 
 
 def pq_encode(
@@ -869,35 +920,38 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Encode each (normalized) vector as ``m`` one-byte codes — a
-    64-float embedding compresses to 8 bytes, the memory trick that
-    lets a 100 TB vector corpus fit a RAM-resident index.  Arrow-
-    batched numpy argmin per subspace."""
+    """Encode each vector as ``m`` one-byte codes — a 64-float embedding
+    compresses to 8 bytes, the memory trick that lets a 100 TB vector
+    corpus fit a RAM-resident index.  Input vectors are expected to be
+    L2-normalized (the codebooks are).
+
+    The vector is micro-quantized in the JVM (``_vec_micro``); per
+    subspace j the code is argmin_c sum((v_j - C[j][c])^2) in exact
+    int64, ties to the lowest c (``ndarray.argmin`` returns the first
+    minimum).  A stateless Arrow-batched mapInPandas, so it applies to
+    a streaming frame unchanged (append mode, no state): the pattern
+    for maintaining a PQ index as vectors arrive, and replayed
+    micro-batches re-encode identically."""
     import numpy as np
     import pandas as pd
 
-    B = [np.asarray(b) for b in codebooks]
-    m = len(B)
-    sub = B[0].shape[1]
+    B = np.asarray(codebooks, dtype="int64")
+    m, _, sub = B.shape
 
     def enc(batches):
         for pdf in batches:
             if pdf.empty:  # np.vstack raises on a zero-row batch
                 continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            X /= np.linalg.norm(X, axis=1, keepdims=True) + 1e-12
+            X = np.vstack(pdf["vq"].to_numpy())
             codes = np.empty((len(X), m), dtype="int32")
             for j in range(m):
-                S = X[:, j * sub : (j + 1) * sub]
-                d = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col], "codes": list(codes.tolist())}
-            )
+                S = X[:, None, j * sub : (j + 1) * sub]
+                codes[:, j] = ((S - B[j]) ** 2).sum(axis=2).argmin(axis=1)
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "codes": codes.tolist()})
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        enc, schema="vec_id long, codes array<int>"
-    )
+    return corpus.select(
+        F.col(id_col).alias("vec_id"), _vec_micro(F.col(vec_col)).alias("vq")
+    ).mapInPandas(enc, schema="vec_id long, codes array<int>")
 
 
 def pq_topk(
@@ -909,71 +963,62 @@ def pq_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via asymmetric distance computation (ADC):
-    each query builds an m x ncodes lookup table of exact sub-distances
-    to every codebook entry, and a corpus vector's approximate distance
-    is m table lookups summed — no float math per candidate.
+    each query builds an m x ncodes table of exact int64 sub-distances
+    to every codebook entry, and a corpus vector's distance is m table
+    lookups summed — the scan reads codes only, never float vectors.
+    Input vectors are expected to be L2-normalized.
 
-    Scale shape mirrors ``block_topk``: each partition emits only its
-    LOCAL top-k per query (numpy argpartition over the looked-up
-    distance matrix), then one window prunes partitions*k rows to the
-    global top-k.  The pair relation is never materialized."""
+    Returns (query_id, neighbor_id, rnk, adc_dist_sq_micro), self-matches
+    excluded, ties on neighbor_id ascending.  The query set is collected
+    once (small by contract); each Arrow batch emits only its LOCAL
+    top-k per query, chosen by a stable (distance, id) lexsort — a
+    partial sort would break exact ties arbitrarily — and one window
+    ranks the survivors.  The pair relation is never materialized."""
     import numpy as np
     import pandas as pd
 
-    B = [np.asarray(b) for b in codebooks]
-    m = len(B)
-    sub = B[0].shape[1]
-    q_rows = queries.select(id_col, vec_col).collect()
-    Q = np.vstack([r[1] for r in q_rows]).astype("float64")
-    Q /= np.linalg.norm(Q, axis=1, keepdims=True) + 1e-12
-    q_ids = [int(r[0]) for r in q_rows]
-    # tables[qi][j][code] = ||q_sub - centroid||^2
-    tables = np.stack(
-        [
-            np.stack(
-                [
-                    ((Q[qi, j * sub : (j + 1) * sub][None, :] - B[j]) ** 2).sum(
-                        axis=1
-                    )
-                    for j in range(m)
-                ]
-            )
-            for qi in range(len(q_ids))
-        ]
-    )
+    B = np.asarray(codebooks, dtype="int64")
+    m, _, sub = B.shape
+    q_rows = queries.select(id_col, _vec_micro(F.col(vec_col))).collect()
+    if not q_rows:
+        return codes_df.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, rnk int, adc_dist_sq_micro long"
+        )
+    q_ids = np.array([r[0] for r in q_rows], dtype="int64")
+    Q = np.array([r[1] for r in q_rows], dtype="int64").reshape(len(q_ids), m, 1, sub)
+    T = ((Q - B) ** 2).sum(axis=3)  # T[q, j, c] = ||q_j - C[j][c]||^2
 
     def score(batches):
         for pdf in batches:
-            C = np.asarray(list(pdf["codes"]), dtype="int64")
+            if pdf.empty:
+                continue
+            C = np.vstack(pdf["codes"].to_numpy())
             ids = pdf["vec_id"].to_numpy()
-            out_q, out_n, out_d = [], [], []
+            D = sum(T[:, j, C[:, j]] for j in range(m))  # (queries, rows)
+            qs, tops = [], []
             for qi, qid in enumerate(q_ids):
-                d = tables[qi][np.arange(m)[:, None], C.T].sum(axis=0)
-                mask = ids != qid  # exclude self-match
-                cand_ids, cand_d = ids[mask], d[mask]
-                take = min(k, len(cand_ids))
-                if not take:
-                    continue
-                part = np.argpartition(cand_d, take - 1)[:take]
-                out_q += [qid] * take
-                out_n += cand_ids[part].tolist()
-                out_d += cand_d[part].tolist()
+                cand = np.flatnonzero(ids != qid)
+                tops.append(cand[np.lexsort((ids[cand], D[qi, cand]))[:k]])
+                qs.append(np.full(len(tops[-1]), qi))
+            qi, top = np.concatenate(qs), np.concatenate(tops)
             yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc_dist": out_d}
+                {
+                    "query_id": q_ids[qi],
+                    "neighbor_id": ids[top],
+                    "adc_dist_sq_micro": D[qi, top],
+                }
             )
 
-    local = codes_df.mapInPandas(
-        score, schema="query_id long, neighbor_id long, adc_dist double"
+    local = codes_df.select("vec_id", "codes").mapInPandas(
+        score, schema="query_id long, neighbor_id long, adc_dist_sq_micro long"
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+        F.col("adc_dist_sq_micro").asc(), F.col("neighbor_id").asc()
     )
     return (
         local.withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id", "rnk", F.round("adc_dist", 6).alias("adc_dist")
-        )
+        .select("query_id", "neighbor_id", "rnk", "adc_dist_sq_micro")
     )
 
 
@@ -987,229 +1032,30 @@ def pq_topk_rerank(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Two-stage PQ search: the ADC pass shortlists ``shortlist``
-    candidates per query from the byte codes, then ONLY those rows are
-    re-scored with exact cosine against the float vectors — the
-    standard recall-recovery pattern (IndexIVFPQ + refine).  The exact
-    pass touches |queries| * shortlist vectors regardless of corpus
-    size; recall approaches exact search as shortlist grows while the
-    full-corpus scan still reads nothing but 32-byte codes."""
+    """Two-stage PQ search (IndexIVFPQ + refine): the ADC pass
+    shortlists ``shortlist`` candidates per query from the byte codes,
+    then ONLY those rows are re-scored with exact cosine over the
+    micro-quantized vectors.  Input vectors are expected to be
+    L2-normalized.  The cosine is int64 dot products in the JVM, so the
+    ratio and its 6-dp round start from identical integers in any
+    engine.  The candidate list broadcasts into the corpus scan:
+    float-width payloads never shuffle, and the exact pass touches
+    |queries| * shortlist vectors regardless of corpus size."""
     cand = pq_topk(
         codes_df, queries, codebooks, k=shortlist, id_col=id_col, vec_col=vec_col
     ).select("query_id", "neighbor_id")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    from ..functions.vectors import cosine_pandas
-
-    # broadcast the (|queries| * shortlist)-row candidate list into the
-    # corpus scan: the float vectors must NOT shuffle — that would move
-    # the whole corpus for a 500-row shortlist
-    scored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos_sim", cosine_pandas("q_vec", "c_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id", "rnk", F.round("cos_sim", 6).alias("cos_sim")
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Frozen-codebook PQ: the differential-testable twin of the trained path
-# ---------------------------------------------------------------------------
-
-PQ_MICRO = 1_000_000  # micro-unit quantization scale (the rrf_micro idiom)
-
-
-def pq_frozen_codebooks(
-    m: int = 8, ncodes: int = 4, sub: int = 8
-) -> list[list[list[int]]]:
-    """md5-derived frozen PQ codebooks in INTEGER micro-units: entry
-    [j][c][d] is ±125000 (±0.125 scaled by PQ_MICRO) with sign from the
-    parity of md5("pqcb|j|c|d") — the pca_projection_check trick applied
-    to PQ.  Any engine with md5 rebuilds the identical constants, and
-    because they are integers the entire encode/ADC/rerank pipeline
-    below is EXACT integer arithmetic: no float drift can flip an
-    argmin, so the full path is replayable in DuckDB CTEs and
-    oracle-checked instead of rows-only.  ``pq_train`` remains the
-    production trainer (sample-trained, recall-tested); these books
-    pin the MECHANISM, not the clustering quality."""
-    import hashlib
-
-    def par(j: int, c: int, d: int) -> int:
-        h = int(hashlib.md5(f"pqcb|{j}|{c}|{d}".encode()).hexdigest()[:15], 16)
-        return 125_000 if h & 1 else -125_000
-
-    return [
-        [[par(j, c, d) for d in range(sub)] for c in range(ncodes)]
-        for j in range(m)
-    ]
-
-
-def _vec_micro(vec_col):
-    """Quantize a float/double vector to int64 micro-units — identical
-    in DuckDB as list_transform(v::DOUBLE[], x -> CAST(round(x*1000000)
-    AS BIGINT)) (float->double widening is exact in both engines)."""
-    return F.transform(
-        vec_col, lambda x: F.round(x * F.lit(float(PQ_MICRO))).cast("long")
-    )
-
-
-def _sqdist_fold(a, b):
-    """sum((a-b)^2) over two int64 arrays — a sequential fold, but
-    integer addition is associative so ANY engine's sum matches."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def pq_encode_frozen(
-    corpus: DataFrame,
-    books: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode each vector against frozen integer codebooks: per
-    subspace j, code = argmin_c sum((vq_sub - C[j][c])^2) with ties to
-    the lowest c (struct-min).  Entirely JVM-side codegen — the micro
-    vector is a multiply-referenced non-cheap alias, so Catalyst keeps
-    the two projection levels (the text_stats CSE discipline) and the
-    quantization runs once, not once per distance."""
-    m = len(books)
-    ncodes = len(books[0])
-    sub = len(books[0][0])
-    base = corpus.select(
-        F.col(id_col).alias("vec_id"), _vec_micro(F.col(vec_col)).alias("vq")
-    )
-    code_cols = []
-    for j in range(m):
-        sv = F.slice(F.col("vq"), j * sub + 1, sub)
-        opts = [
-            F.struct(
-                _sqdist_fold(
-                    sv, F.array(*[F.lit(v) for v in books[j][c]])
-                ).alias("d"),
-                F.lit(c).alias("c"),
-            )
-            for c in range(ncodes)
-        ]
-        code_cols.append(F.array_min(F.array(*opts))["c"])
-    return base.select(
-        "vec_id", F.array(*code_cols).cast("array<int>").alias("codes")
-    )
-
-
-def pq_adc_topk_frozen(
-    codes_df: DataFrame,
-    queries_vq: DataFrame,
-    books: list[list[list[int]]],
-    k: int = 5,
-    shards: int = 64,
-) -> DataFrame:
-    """ADC top-k over frozen-codebook byte codes, exact int64 math.
-
-    ``codes_df`` is (vec_id, codes); ``queries_vq`` is (query_id, qvq)
-    with qvq already micro-quantized.  A candidate's approximate
-    distance is m codebook lookups against the query's subvectors —
-    the scan reads CODES only, never float vectors (the PQ memory
-    trick).  Top-k is TWO-LEVEL (the scale-safe shape): rank within
-    (query_id, neighbor_id % shards) first — each level-1 partition
-    holds n/shards candidates — then rank the <= shards*k survivors
-    per query.  A single global per-query window would funnel every
-    candidate row of a query through one task at 1e9 corpus size.
-    Deterministic: integer distances, ties broken on neighbor_id."""
-    m = len(books)
-    sub = len(books[0][0])
-    joined = codes_df.crossJoin(F.broadcast(queries_vq)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    adc = None
-    for j in range(m):
-        qs = F.slice(F.col("qvq"), j * sub + 1, sub)
-        cb_j = F.array(
-            *[F.array(*[F.lit(v) for v in c]) for c in books[j]]
-        )
-        d_j = _sqdist_fold(
-            qs, F.element_at(cb_j, F.element_at("codes", j + 1) + F.lit(1))
-        )
-        adc = d_j if adc is None else adc + d_j
-    scored = joined.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        adc.alias("adc_dist_sq_micro"),
-    )
-    w1 = Window.partitionBy(
-        "query_id", F.pmod(F.col("neighbor_id"), F.lit(shards))
-    ).orderBy(F.col("adc_dist_sq_micro").asc(), F.col("neighbor_id").asc())
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist_sq_micro").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= k)
-        .withColumn("rnk", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "adc_dist_sq_micro")
-    )
-
-
-def pq_rerank_frozen(
-    corpus: DataFrame,
-    codes_df: DataFrame,
-    queries: DataFrame,
-    books: list[list[list[int]]],
-    k: int = 5,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-stage frozen-PQ search: ADC shortlists ``shortlist``
-    candidates per query from codes alone, then ONLY those rows are
-    re-scored with exact cosine over the micro-quantized vectors
-    (int64 dot products — bit-exact cross-engine; the final ratio and
-    6-dp round are computed from identical integers, so they round
-    identically).  The candidate list broadcasts into the corpus scan:
-    float-width payloads never shuffle."""
     qvq = queries.select(
         F.col(id_col).alias("query_id"),
         _vec_micro(F.col(vec_col)).alias("qvq"),
-    )
-    cand = pq_adc_topk_frozen(codes_df, qvq, books, k=shortlist).select(
-        "query_id", "neighbor_id"
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _vec_micro(F.col(vec_col)).alias("cvq"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qvq"), F.col("cvq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    dot = _int_dot(F.col("qvq"), F.col("cvq"))
+    den = F.sqrt(_int_dot(F.col("qvq"), F.col("qvq")).cast("double")) * F.sqrt(
+        _int_dot(F.col("cvq"), F.col("cvq")).cast("double")
     )
-    nq = F.aggregate(
-        F.transform(F.col("qvq"), lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    nc = F.aggregate(
-        F.transform(F.col("cvq"), lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    den = F.sqrt(nq.cast("double")) * F.sqrt(nc.cast("double"))
     cos = F.when(den > 0, dot.cast("double") / den).otherwise(F.lit(0.0))
     scored = (
         c.join(F.broadcast(cand), "neighbor_id")

@@ -1732,21 +1732,18 @@ _PQ_SQL_COMMON = f"""
     "micro-quantize to int64, and encode/ADC are exact integer "
     "arithmetic, so DuckDB replays every argmin and every distance "
     "bit-for-bit (a sample-TRAINED codebook cannot ride in a static "
-    "SQL string; pq_train/pq_encode/pq_topk remain the production "
-    "trainer, recall-tested in tests/test_diagnostics.py).  The scan "
-    "reads 8 one-byte codes per vector, never floats; top-k is the "
-    "TWO-LEVEL sharded rank (per (query, id%64) first, then the <=64*k "
-    "survivors) so no single task ever sees a query's full candidate "
-    "stream at 1e9 corpus size.",
+    "SQL string; the same pq_encode/pq_topk serve pq_train's books, "
+    "recall-tested in tests/test_diagnostics.py).  The scan reads 8 "
+    "one-byte codes per vector, never floats; each Arrow batch keeps "
+    "its local top-k per query by (distance, id) and one window ranks "
+    "the survivors, so the pair relation never exists (the oracle's "
+    "two-level per-(query, id%64) rank selects the same rows).",
 )
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    codes = similarity.pq_encode_frozen(emb, _PQ_BOOKS)
-    qvq = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        similarity._vec_micro(F.col("embedding")).alias("qvq"),
-    )
-    return similarity.pq_adc_topk_frozen(codes, qvq, _PQ_BOOKS, k=5).orderBy(
+    codes = similarity.pq_encode(emb, _PQ_BOOKS)
+    queries = emb.filter(F.col("vec_id") < 10)
+    return similarity.pq_topk(codes, queries, _PQ_BOOKS, k=5).orderBy(
         "query_id", "rnk"
     )
 
@@ -1797,14 +1794,14 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from identical integers).  The exact pass is |queries| x "
     "shortlist regardless of corpus size and the candidate list "
     "broadcasts into the corpus scan, so float-width payloads never "
-    "shuffle.  pq_topk_rerank (sample-trained books) remains the "
-    "production twin with its >= 0.9 recall pin.",
+    "shuffle.  The same pq_topk_rerank serves pq_train's books with a "
+    ">= 0.9 recall pin.",
 )
 def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    codes = similarity.pq_encode_frozen(emb, _PQ_BOOKS)
-    return similarity.pq_rerank_frozen(
+    codes = similarity.pq_encode(emb, _PQ_BOOKS)
+    return similarity.pq_topk_rerank(
         emb, codes, queries, _PQ_BOOKS, k=5, shortlist=50
     ).orderBy("query_id", "rnk")
 

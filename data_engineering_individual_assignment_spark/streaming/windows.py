@@ -781,21 +781,6 @@ def stream_embeddings(spark: SparkSession, landing_dir: str) -> DataFrame:
     )
 
 
-def pq_encode_stream(emb_stream: DataFrame, codebooks) -> DataFrame:
-    """Streaming product-quantization encode: vectors compress to byte
-    codes AS THEY ARRIVE.  ``pq_encode`` is a stateless Arrow-batched
-    mapInPandas against broadcast codebooks, so it applies to a
-    streaming relation unchanged (append mode, zero streaming state) —
-    the pattern for maintaining a PQ index incrementally instead of
-    re-encoding 100 TB of vectors per refresh.  Codebooks come from
-    ``operators.similarity.pq_train`` on a historical sample; encode
-    determinism (same codebooks -> same codes) is what makes replayed
-    micro-batches idempotent."""
-    from ..operators.similarity import pq_encode
-
-    return pq_encode(emb_stream, codebooks)
-
-
 def cms_stream(docs_stream: DataFrame) -> DataFrame:
     """Streaming Count-Min maintenance: the CMS *cell relation* is just
     a (row, bucket) -> count aggregate, so keeping it current over a

@@ -49,7 +49,6 @@ def main() -> None:
             i += 1
 
     evdir = tempfile.mkdtemp(prefix="dei_evlog_")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
     from pyspark.sql import SparkSession
 

@@ -21,3 +21,17 @@ def spark():
     s = get_spark("dei-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_intermediates():
+    """Unpersist what a test's queries cached (dedup._PERSISTED): tests
+    that call a catalog builder directly never reach the release in
+    ``__spark_entry__.queries()``, so without this the blocks would stay
+    cached for the rest of the session."""
+    yield
+    from data_engineering_individual_assignment_spark.operators.dedup import (
+        release_intermediates,
+    )
+
+    release_intermediates()

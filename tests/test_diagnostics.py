@@ -265,12 +265,13 @@ def test_banded_interval_join_plans_as_equi_join(spark):
 
 
 def test_pq_adc_recall_against_exact_topk(spark):
-    """The TRAINED PQ production path (pq_train/pq_encode/pq_topk) must
+    """PQ with TRAINED codebooks (pq_train/pq_encode/pq_topk) must
     reconstruct a usable neighbor list: recall@5 vs the exact
     brute-force top-5 pinned >= 0.4 (32x16 codebooks on 64 dims), and
     the 32-byte codes must decode to the full corpus.  (The catalog's
-    ann_pq_adc entry now runs the FROZEN-codebook oracle twin — this
-    test is what keeps the sample-trained variant recall-graded.)"""
+    ann_pq_adc runs the same engine on md5-frozen codebooks, which the
+    oracle checks but which carry no recall — this test grades the
+    sample-trained books.)"""
     from data_engineering_individual_assignment_spark import plans
     from data_engineering_individual_assignment_spark.operators import similarity
     from pyspark.sql import functions as F
@@ -297,8 +298,8 @@ def test_pq_adc_recall_against_exact_topk(spark):
 
 
 def test_pq_rerank_recovers_near_exact_recall(spark):
-    """Trained-path rerank twin: exact-cosine refine over the trained
-    ADC shortlist recovers >= 0.9 recall vs brute force."""
+    """Rerank with trained codebooks: exact-cosine refine over the
+    trained ADC shortlist recovers >= 0.9 recall vs brute force."""
     from data_engineering_individual_assignment_spark import plans
     from data_engineering_individual_assignment_spark.operators import similarity
     from pyspark.sql import functions as F

@@ -31,8 +31,16 @@ def test_catalog_nonempty():
 
 @pytest.mark.parametrize("name", sorted(_catalog().keys()))
 def test_query_against_oracle(spark, con, name):
+    """Also: no query may compile to an unconditioned cartesian product
+    over two large inputs (broadcast nested-loop against literal/1-row
+    frames is fine and expected for range joins + coefficient joins).
+    The plan is read before the query runs."""
     q = _catalog()[name]
     df = q.fn(spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    assert "CartesianProduct" not in plan, f"{name}: compiled a CartesianProduct"
     if q.sql is None:
         # rows-only contract: must execute and return a stable schema
         assert df.columns, f"{name}: no columns"

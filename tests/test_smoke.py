@@ -179,10 +179,8 @@ KEEP = {
     "simhash_near_pairs": "measured win over simhash_near_pairs_portable: "
     "4.60 vs 5.48 s at a 10x replica",
     "subfingerprints": "per-clip test reference for the batched fingerprints",
-    "pq_train": "trained-PQ recall path: recall pins >= 0.4 and >= 0.9 "
+    "pq_train": "trained PQ codebooks: recall pins >= 0.4 and >= 0.9 "
     "that the frozen codebooks cannot give",
-    "pq_topk": "trained-PQ recall path (see pq_train)",
-    "pq_topk_rerank": "trained-PQ recall path (see pq_train)",
 }
 
 

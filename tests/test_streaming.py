@@ -501,7 +501,7 @@ def test_pq_encode_stream_equals_batch(spark, tmp_path):
 
     stream_out = W.run_to_memory(
         spark,
-        W.pq_encode_stream(W.stream_embeddings(spark, landing), books),
+        similarity.pq_encode(W.stream_embeddings(spark, landing), books),
         mode="append",
     )
     batch_out = similarity.pq_encode(emb, books)

@@ -1089,24 +1089,28 @@ def test_wordpiece_train_agrees_with_pure_python_reference(spark):
 
 
 def test_pq_frozen_agrees_with_pure_python_reference(spark):
-    """The frozen-codebook PQ path (encode argmin, ADC distances,
-    two-level top-k, int-cosine rerank) must reproduce a plain-Python
-    integer replay on a small corpus — every number is exact int64
-    micro arithmetic, so agreement is EXACT."""
+    """The PQ engine (encode argmin, ADC distances, top-k, int-cosine
+    rerank) must reproduce a plain-Python integer replay on a small
+    corpus, for both the md5-frozen and a pq_train codebook set — every
+    number is exact int64 micro arithmetic, so agreement is EXACT.  Ids
+    20-29 duplicate 0-9, so ADC ties straddle the k boundary and must
+    break on neighbor_id, both across partitions and inside one
+    batch's local top-k.  An empty query set returns an empty frame
+    with the catalog schema."""
     import hashlib
+    import math
 
     from data_engineering_individual_assignment_spark.operators.similarity import (
         PQ_MICRO,
-        pq_adc_topk_frozen,
-        pq_encode_frozen,
+        pq_encode,
         pq_frozen_codebooks,
-        pq_rerank_frozen,
-        _vec_micro,
+        pq_topk,
+        pq_topk_rerank,
+        pq_train,
     )
     from pyspark.sql import functions as F
 
-    m, ncodes, sub = 4, 3, 2  # dim 8
-    books = pq_frozen_codebooks(m=m, ncodes=ncodes, sub=sub)
+    m, ncodes, sub, k, shortlist = 4, 3, 2, 3, 5  # dim 8
     # deterministic synthetic vectors
     def vec(i):
         return [
@@ -1115,13 +1119,23 @@ def test_pq_frozen_agrees_with_pure_python_reference(spark):
             for d in range(m * sub)
         ]
 
-    rows = [(i, vec(i)) for i in range(20)]
+    rows = []
+    for i in range(20):
+        if i < 10:
+            rows.append((20 + i, vec(i)))
+        rows.append((i, vec(i)))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ids = [i for i, _ in rows]
+    qids = [0, 1, 2, 3]
+    queries = emb.filter(F.col("vec_id") < len(qids))
+    adc_dtypes = [
+        ("query_id", "bigint"), ("neighbor_id", "bigint"),
+        ("rnk", "int"), ("adc_dist_sq_micro", "bigint"),
+    ]
+    rr_dtypes = adc_dtypes[:3] + [("cos_sim", "double")]
 
     def q(x):
         # python round() is banker's; replicate HALF_UP like F.round
-        import math
-
         y = x * PQ_MICRO
         return int(math.floor(y + 0.5) if y >= 0 else math.ceil(y - 0.5))
 
@@ -1130,67 +1144,71 @@ def test_pq_frozen_agrees_with_pure_python_reference(spark):
     def d2(a, b):
         return sum((x - y) * (x - y) for x, y in zip(a, b))
 
-    def codes(i):
-        out = []
-        for j in range(m):
-            sv = vq[i][j * sub : (j + 1) * sub]
-            ds = [(d2(sv, books[j][c]), c) for c in range(ncodes)]
-            out.append(min(ds)[1])
-        return out
-
-    got_codes = {
-        r.vec_id: list(r.codes) for r in pq_encode_frozen(emb, books).collect()
-    }
-    assert got_codes == {i: codes(i) for i, _ in rows}
-
-    qids = [0, 1]
-    def adc(qi, ci):
-        cc = codes(ci)
-        return sum(
-            d2(vq[qi][j * sub : (j + 1) * sub], books[j][cc[j]])
-            for j in range(m)
-        )
-
-    expect_topk = {}
-    for qi in qids:
-        scored = sorted(
-            (adc(qi, ci), ci) for ci, _ in rows if ci != qi
-        )[:3]
-        expect_topk[qi] = [(ci, rk + 1, d) for rk, (d, ci) in enumerate(scored)]
-    qvq = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"),
-        _vec_micro(F.col("embedding")).alias("qvq"),
-    )
-    got_topk = {}
-    for r in pq_adc_topk_frozen(
-        pq_encode_frozen(emb, books), qvq, books, k=3
-    ).collect():
-        got_topk.setdefault(r.query_id, []).append(
-            (r.neighbor_id, r.rnk, r.adc_dist_sq_micro)
-        )
-    assert {k: sorted(v, key=lambda t: t[1]) for k, v in got_topk.items()} == expect_topk
-
-    # rerank: exact int-cosine over the shortlist
-    import math as _math
-
     def cos(a, b):
         dot = sum(x * y for x, y in zip(vq[a], vq[b]))
-        na = _math.sqrt(float(sum(x * x for x in vq[a])))
-        nb = _math.sqrt(float(sum(x * x for x in vq[b])))
+        na = math.sqrt(float(sum(x * x for x in vq[a])))
+        nb = math.sqrt(float(sum(x * x for x in vq[b])))
         return round(dot / (na * nb), 6) if na * nb > 0 else 0.0
 
-    expect_rr = {}
-    for qi in qids:
-        short = [ci for _, ci in sorted((adc(qi, ci), ci) for ci, _ in rows if ci != qi)[:5]]
-        ranked = sorted(short, key=lambda ci: (-cos(qi, ci), ci))[:3]
-        expect_rr[qi] = [(ci, rk + 1, cos(qi, ci)) for rk, ci in enumerate(ranked)]
-    got_rr = {}
-    for r in pq_rerank_frozen(
-        emb, pq_encode_frozen(emb, books),
-        emb.filter(F.col("vec_id") < 2), books, k=3, shortlist=5,
-    ).collect():
-        got_rr.setdefault(r.query_id, []).append((r.neighbor_id, r.rnk, r.cos_sim))
-    assert {k: sorted(v, key=lambda t: t[1]) for k, v in got_rr.items()} == expect_rr
+    def by_query(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r[0], []).append(tuple(r[1:]))
+        return {qi: sorted(v, key=lambda t: t[1]) for qi, v in out.items()}
+
+    frozen = pq_frozen_codebooks(m=m, ncodes=ncodes, sub=sub)
+    trained = pq_train(emb, m=m, ncodes=ncodes, sample=len(rows), iters=5)
+    assert trained != frozen
+    for books in (frozen, trained):
+        def codes(i):
+            out = []
+            for j in range(m):
+                sv = vq[i][j * sub : (j + 1) * sub]
+                out.append(min((d2(sv, books[j][c]), c) for c in range(ncodes))[1])
+            return out
+
+        cc = {i: codes(i) for i in ids}
+        ranked = {
+            qi: sorted(
+                (sum(d2(vq[qi][j * sub : (j + 1) * sub], books[j][cc[ci][j]])
+                     for j in range(m)), ci)
+                for ci in ids if ci != qi
+            )
+            for qi in qids
+        }
+        # the duplicates must put an exact tie across the k boundary
+        assert any(r[k - 1][0] == r[k][0] for r in ranked.values())
+        expect_topk = {
+            qi: [(ci, rk + 1, d) for rk, (d, ci) in enumerate(r[:k])]
+            for qi, r in ranked.items()
+        }
+        expect_rr = {}
+        for qi, r in ranked.items():
+            short = [ci for _, ci in r[:shortlist]]
+            top = sorted(short, key=lambda ci: (-cos(qi, ci), ci))[:k]
+            expect_rr[qi] = [(ci, rk + 1, cos(qi, ci)) for rk, ci in enumerate(top)]
+
+        codes_df = pq_encode(emb, books)
+        assert {r.vec_id: list(r.codes) for r in codes_df.collect()} == cc
+        # several partitions (the window merges local top-k lists) and
+        # one (the local top-k itself must break the ties)
+        for corpus, laid_out in (
+            (emb, codes_df), (emb.coalesce(1), codes_df.coalesce(1))
+        ):
+            got = pq_topk(laid_out, queries, books, k=k)
+            assert got.dtypes == adc_dtypes
+            assert by_query(got) == expect_topk
+            got = pq_topk_rerank(
+                corpus, laid_out, queries, books, k=k, shortlist=shortlist
+            )
+            assert got.dtypes == rr_dtypes
+            assert by_query(got) == expect_rr
+
+    none = emb.filter(F.col("vec_id") < 0)
+    got = pq_topk(codes_df, none, books, k=k)
+    assert got.dtypes == adc_dtypes and got.count() == 0
+    got = pq_topk_rerank(emb, codes_df, none, books, k=k)
+    assert got.dtypes == rr_dtypes and got.count() == 0
 
 
 def test_unigram_fertility_invariants_and_training_effect(spark):

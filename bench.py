@@ -9,6 +9,11 @@ JSON line ($SPARK_GRAFT_CPUS defaults to the cores this process may use):
 forced by a write to the noop sink after a fresh plan build, which
 computes every output column (a count() would let Catalyst prune them),
 so the number reflects scan+plan+execute, not cached results.
+
+Per query, ``build_s`` and ``exec_s`` are the medians of the plan build
+and of the noop write, timed separately; ``cpus`` and
+``shuffle_partitions`` record the session shape the numbers were taken
+on.
 """
 
 from __future__ import annotations
@@ -88,22 +93,38 @@ def main() -> None:
         except OSError:
             return None
 
+    def median(xs: list[float]) -> float:
+        return sorted(xs)[len(xs) // 2]
+
     steal_before = _steal_jiffies()
     load_before = loadavg_1m()
     timings: dict[str, float] = {}
+    build_s: dict[str, float] = {}
+    exec_s: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
         q = plans.CATALOG[name]
         samples: list[float] = []
+        builds: list[float] = []
+        execs: list[float] = []
         for _ in range(extra_runs.get(name, runs)):
             release_intermediates()  # outside the timed window
+            # build = driver-side plan construction (including any eager
+            # count/localCheckpoint the builder runs); exec = the noop write
             t0 = time.perf_counter()
-            run(q.fn(spark, sf_dir))
-            samples.append(round(time.perf_counter() - t0, 3))
+            df = q.fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            run(df)
+            t2 = time.perf_counter()
+            samples.append(round(t2 - t0, 3))
+            builds.append(round(t1 - t0, 3))
+            execs.append(round(t2 - t1, 3))
         release_intermediates()
         samples.sort()
         all_runs[name] = samples
-        timings[name] = samples[len(samples) // 2]
+        timings[name] = median(samples)
+        build_s[name] = median(builds)
+        exec_s[name] = median(execs)
     total = round(sum(timings.values()), 3)
     steal_after = _steal_jiffies()
 
@@ -122,6 +143,12 @@ def main() -> None:
                 "runs": runs,
                 "median": True,
                 "samples": all_runs,
+                "build_s": build_s,
+                "exec_s": exec_s,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(
+                    spark.conf.get("spark.sql.shuffle.partitions")
+                ),
                 "loadavg_1m": load_before,
                 "loadavg_1m_after": loadavg_1m(),
                 "steal_delta_jiffies": (

@@ -16,12 +16,11 @@ Design rules at 100 TB:
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, tokens
+from ..sources.readers import _scan_partitions
 
 # Persisted intermediates (the shingle relation feeds both the candidate
 # and the verification subtree, so it must stay cached until the caller
@@ -58,46 +57,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if _scan_partitions(df) < target:
         return df.repartition(target)
     return df
-
-
-# Memoized partition counts for _spread's probe, keyed by the path tag
-# that sources/readers.load_table attaches to the DataFrames it returns.
-# df.rdd.getNumPartitions() converts the whole plan to an RDD on the
-# driver (~120 ms per call); the count for a given (session, file path)
-# is stable within a process, so pay it once.  Purely a performance
-# heuristic: a stale entry can only mis-steer the repartition decision,
-# never change results.  Session scoping (r13): a WeakKeyDictionary
-# keyed by the SparkSession object — entries die with the session, so
-# a new session never aliases a dead one's counts (the r12 id(spark)
-# key could); file-rewriting maintenance ops call
-# readers.invalidate_table -> _invalidate_nparts when layout changes.
-_NPARTS_CACHE: "weakref.WeakKeyDictionary[object, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _invalidate_nparts(spark, path: str) -> None:
-    per = _NPARTS_CACHE.get(spark)
-    if per is not None:
-        per.pop(path, None)
-
-
-def _scan_partitions(df: DataFrame) -> int:
-    # __dict__.get (instance attrs only): getattr would fall through to
-    # DataFrame.__getattr__, which resolves unknown names as COLUMNS —
-    # a user table with a column named like the tag must not break here
-    path = df.__dict__.get("_dei_nparts_path")
-    if path is None:
-        return df.rdd.getNumPartitions()
-    per = _NPARTS_CACHE.get(df.sparkSession)
-    if per is None:
-        per = {}
-        _NPARTS_CACHE[df.sparkSession] = per
-    n = per.get(path)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        per[path] = n
-    return n
 
 
 def release_intermediates() -> int:

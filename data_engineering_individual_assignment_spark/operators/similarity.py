@@ -368,7 +368,6 @@ def hyperplane_lsh_pairs(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_tables: int = 1,
 ) -> DataFrame:
     """APPROXIMATE embedding near-dup via random-hyperplane LSH (SimHash
     for vectors, Charikar 2002): each vector gets a ``num_planes``-bit
@@ -395,19 +394,6 @@ def hyperplane_lsh_pairs(
     work scan-bound.)  The bucket depends only on each projection's
     SIGN, so fold order never flips a bit that a shuffle-ordered sum
     would not.
-
-    ``num_tables`` > 1 is the RECALL lever at capped width (the
-    ``derived_num_planes`` 32-plane ceiling trades recall
-    ~0.905^planes per table at cos 0.95): L independent md5-salted
-    plane sets hash every vector L times, candidates are the UNION of
-    per-table bucket collisions (one equi-join on (table, bucket),
-    distinct pairs), and each candidate is cosine-verified once —
-    recall becomes 1-(1-p)^L for per-table collision probability p,
-    at L× signature flops and ~L× candidate volume (measured in
-    SCALING_RUN.json).  Table 0 uses the ORIGINAL plane salts, so the
-    L-table candidate set strictly contains the single-table one and
-    every pinned num_tables=1 result (catalog oracle hashes) is
-    byte-identical to before the knob existed.
     """
     import hashlib
 
@@ -417,76 +403,47 @@ def hyperplane_lsh_pairs(
         # explicitly so their oracle hashes never depend on this
         num_planes = derived_num_planes(corpus.count())
 
-    def sign(t: int, j: int, i: int) -> float:
-        # table 0 keeps the pre-num_tables salt (pinned oracle hashes)
-        salt = f"{j}|{i}" if t == 0 else f"t{t}|{j}|{i}"
-        h = int(hashlib.md5(salt.encode()).hexdigest()[:15], 16)
+    def sign(j: int, i: int) -> float:
+        h = int(hashlib.md5(f"{j}|{i}".encode()).hexdigest()[:15], 16)
         return 1.0 if h & 1 else -1.0
 
-    def table_bucket(t: int):
-        bucket = None
-        for j in range(num_planes):
-            plane_arr = F.array(*[F.lit(sign(t, j, i)) for i in range(dim)])
-            proj = F.aggregate(
-                F.zip_with(F.col(vec_col), plane_arr, lambda x, s: x * s),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = F.when(proj > 0, F.lit(float(2**j))).otherwise(F.lit(0.0))
-            bucket = bit if bucket is None else bucket + bit
-        return bucket.cast("long")
+    bucket = None
+    for j in range(num_planes):
+        plane_arr = F.array(*[F.lit(sign(j, i)) for i in range(dim)])
+        proj = F.aggregate(
+            F.zip_with(F.col(vec_col), plane_arr, lambda x, s: x * s),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bit = F.when(proj > 0, F.lit(float(2**j))).otherwise(F.lit(0.0))
+        bucket = bit if bucket is None else bucket + bit
 
-    # persist ONLY the skinny (doc_id, [table,] bucket) relation — so
-    # the self-join's two sides read the signature pipeline's result
+    # persist ONLY the skinny (doc_id, bucket) relation — so the
+    # self-join's two sides read the signature pipeline's result
     # instead of replaying it, while the bucket equi-join shuffle never
     # carries vectors.  (Persisting the vector-joined signatures was
     # measured 4x SLOWER at 100x: the cache materializes corpus_size x
     # 64 floats and the candidate shuffle drags 256-byte payloads.)
+    # One bucket per doc cannot duplicate a pair, so no distinct.
     from .dedup import _persist
 
-    if num_tables == 1:
-        # single-table plan kept EXACTLY as before the knob (no explode,
-        # no distinct — one bucket per doc cannot duplicate a pair)
-        bk = _persist(
-            corpus.select(
-                F.col(id_col).alias("doc_id"), table_bucket(0).alias("bucket")
-            )
+    bk = _persist(
+        corpus.select(
+            F.col(id_col).alias("doc_id"), bucket.cast("long").alias("bucket")
         )
-        cand = (
-            bk.alias("a")
-            .join(
-                bk.alias("b"),
-                (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-            )
+    )
+    cand = (
+        bk.alias("a")
+        .join(
+            bk.alias("b"),
+            (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-    else:
-        bk = _persist(
-            corpus.select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(
-                    F.array(*[table_bucket(t) for t in range(num_tables)])
-                ).alias("tbl", "bucket"),
-            )
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
-        cand = (
-            bk.alias("a")
-            .join(
-                bk.alias("b"),
-                (F.col("a.tbl") == F.col("b.tbl"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-            )
-            .distinct()  # union of per-table collisions, each pair once
-        )
+    )
     # vectors fetched AFTER candidate generation, by id equi-join against
     # the (columnar, prunable) corpus scan — the near_dup_pairs verify
     # shape: candidates are few, so the wide payload joins stay small

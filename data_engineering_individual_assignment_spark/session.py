@@ -1,17 +1,26 @@
-"""SparkSession factory.
+"""SparkSession factory and the one session policy.
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
 process may run on); the same configuration (AQE on, UTC session time
 zone, Arrow enabled) is what we'd ship to a 1000-executor cluster -- only
 master/memory sizing changes.
 
+The policy is written once.  ``tune_for_oracle`` sets the runtime confs
+every query relies on, on any session: the UTC session time zone, the
+shuffle width (the session's ``defaultParallelism``) and the broadcast
+policy (static never, adaptive up to 64 MB).  ``get_spark`` builds with
+the launch-time confs and the perf switches only it sets, then applies
+``tune_for_oracle``; a driver that hands us its own session reaches the
+same policy through ``__spark_entry__``.
+
 Scale notes (100 TB design point):
 - ``spark.sql.adaptive.enabled``: runtime coalescing of shuffle partitions
   and skew-join splitting; mandatory at scale, harmless locally.
 - ``spark.sql.session.timeZone=UTC``: deterministic timestamp semantics so
   results are comparable across engines (DuckDB oracle) and clusters.
-- shuffle partitions default to ~cores locally; on a real cluster this is
-  sized so each partition is ~128-256 MB post-shuffle (AQE then coalesces).
+- shuffle partitions default to the session's cores; on a real cluster
+  this is sized so each partition is ~128-256 MB post-shuffle (AQE then
+  coalesces).
 """
 
 from __future__ import annotations
@@ -32,19 +41,17 @@ def local_cpus() -> int:
         return len(os.sched_getaffinity(0))
 
 
-def get_spark(app_name: str = "dei-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) the session with engine defaults applied.
+def get_spark(app_name: str = "dei-spark") -> SparkSession:
+    """Build (or fetch) the engine session and apply ``tune_for_oracle``.
 
-    Safe to call when a session already exists: builder configs that can
-    change at runtime are applied via ``spark.conf`` afterwards.
+    Safe to call when a session already exists: ``getOrCreate`` applies
+    the builder's runtime-modifiable confs to it, and ``tune_for_oracle``
+    then resets the session policy (time zone, shuffle width, broadcast
+    thresholds), whatever the session held before.
     """
-    cpus = local_cpus()
-    nshuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(nshuffle))
-        .config("spark.sql.session.timeZone", "UTC")
+        .master(f"local[{local_cpus()}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst stays at its default (true): bytes-based
@@ -59,41 +66,25 @@ def get_spark(app_name: str = "dei-spark", shuffle_partitions: int | None = None
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # NEVER broadcast from STATIC estimates: Catalyst's parquet-based
-        # sizeInBytes undercounts array/string-heavy relations ~10x, and a
-        # statically-planned BroadcastHashJoin of a corpus-sized relation
-        # OOMs the driver building it (observed at 100x on the jaccard
-        # path).  Instead AQE may broadcast from MEASURED post-shuffle
-        # sizes — accurate at any scale, so small dims still get BHJ at
-        # runtime while big relations degrade to spillable SMJ.  Hard
-        # F.broadcast() hints on '# bounded:'-marked dims are unaffected.
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            str(64 * 1024 * 1024),
-        )
         # keep the in-memory catalog's managed tables (bucketed warehouse
         # tables) out of the repo working directory
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_WAREHOUSE_DIR", "/tmp/dei-spark-warehouse"))
     )
-    spark = builder.getOrCreate()
-    # Runtime-settable confs, in case we were handed a pre-built session
-    # (the driver does this): enforce determinism-critical settings.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark
+    return tune_for_oracle(builder.getOrCreate())
 
 
 def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs needed for deterministic oracle comparison on a
-    session we did not build (the driver hands us one).  Also right-size
-    shuffle parallelism: a vanilla session's 200 partitions cost ~10 ms
-    scheduling overhead each across every exchange — at driver test scale
-    (sf0.01-0.1 on one box) that overhead dominates multi-stage queries
-    (AQE coalescing helps reads, not the task-launch floor).  Results are
-    partitioning-independent by construction (value hashes are
-    order-insensitive), so this is safe on any session."""
+    """The session policy, applied at runtime to any session: the one
+    ``get_spark`` builds and the one a driver hands us.
+
+    UTC session time zone for deterministic oracle comparison.  Shuffle
+    width right-sized to the session: a vanilla session's 200 partitions
+    cost ~10 ms scheduling overhead each across every exchange — at
+    driver test scale (sf0.01-0.1 on one box) that overhead dominates
+    multi-stage queries (AQE coalescing helps reads, not the task-launch
+    floor).  Results are partitioning-independent by construction (value
+    hashes are order-insensitive), so this is safe on any session."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # scale-adaptive, not a local constant (r12 judge): the session's
     # own parallelism (local[N] -> N; on a cluster, total executor
@@ -105,8 +96,14 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
         "spark.sql.shuffle.partitions",
         str(max(1, spark.sparkContext.defaultParallelism)),
     )
-    # same broadcast policy as get_spark (see comment there): static
-    # never, adaptive (runtime-measured) up to 64 MB
+    # NEVER broadcast from STATIC estimates: Catalyst's parquet-based
+    # sizeInBytes undercounts array/string-heavy relations ~10x, and a
+    # statically-planned BroadcastHashJoin of a corpus-sized relation
+    # OOMs the driver building it (observed at 100x on the jaccard
+    # path).  Instead AQE may broadcast from MEASURED post-shuffle
+    # sizes — accurate at any scale, so small dims still get BHJ at
+    # runtime while big relations degrade to spillable SMJ.  Hard
+    # F.broadcast() hints on '# bounded:'-marked dims are unaffected.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set(
         "spark.sql.adaptive.autoBroadcastJoinThreshold",

@@ -67,15 +67,41 @@ def _per_session(cache: "weakref.WeakKeyDictionary", spark: SparkSession) -> dic
     return per
 
 
+# Memoized partition counts for operators/dedup._spread's probe, keyed
+# by the path tag load_table attaches to the DataFrames it returns.
+# df.rdd.getNumPartitions() converts the whole plan to an RDD on the
+# driver (~120 ms per call); the count for a given (session, file path)
+# is stable within a process, so pay it once.  Purely a performance
+# heuristic: a stale entry can only mis-steer the repartition decision,
+# never change results.  Session-scoped like _SCHEMA_CACHE, and dropped
+# by invalidate_table when a rewrite changes the layout.
+_NPARTS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, int]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def invalidate_table(spark: SparkSession, path: str) -> None:
     """Drop cached metadata (schema + partition-count memo) for ``path``
     — called by any code path that rewrites a table in place, so later
     ``load_table`` reads re-infer from the new footers instead of
     trusting stale entries."""
     _per_session(_SCHEMA_CACHE, spark).pop(path, None)
-    from ..operators.dedup import _invalidate_nparts
+    _per_session(_NPARTS_CACHE, spark).pop(path, None)
 
-    _invalidate_nparts(spark, path)
+
+def _scan_partitions(df: DataFrame) -> int:
+    """``df``'s partition count, memoized per (session, path) for
+    DataFrames load_table returned."""
+    # __dict__.get (instance attrs only): getattr would fall through to
+    # DataFrame.__getattr__, which resolves unknown names as COLUMNS —
+    # a user table with a column named like the tag must not break here
+    path = df.__dict__.get("_dei_nparts_path")
+    if path is None:
+        return df.rdd.getNumPartitions()
+    per = _per_session(_NPARTS_CACHE, df.sparkSession)
+    if path not in per:
+        per[path] = df.rdd.getNumPartitions()
+    return per[path]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -100,7 +126,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # integer division: `/` would go through double, whose 53-bit
         # mantissa can't hold epoch-nanos and drifts the result ±1µs
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Python-side tag for operators/dedup._spread: lets the partition-
+    # Python-side tag for _scan_partitions: lets the partition-
     # count probe (df.rdd.getNumPartitions() = a full plan->RDD
     # conversion, ~120 ms of driver time per call) be memoized per
     # (session, path).  A perf heuristic key only — never used for

@@ -119,7 +119,7 @@ def main() -> None:
     from data_engineering_individual_assignment_spark import plans
     from data_engineering_individual_assignment_spark.session import get_spark
 
-    spark = get_spark("plans-doc", shuffle_partitions=8)
+    spark = get_spark("plans-doc")
     spark.sparkContext.setLogLevel("ERROR")
     out = [
         "# PLANS — physical-plan evidence for the headline queries",

@@ -2,7 +2,8 @@
 """Targeted scale rows for NON-catalog operator paths (the catalog sweep
 in scale_check.py cannot see them): run each at sf0.1 and at a 10x
 replicate and merge rows into SCALING_RUN.json under self-describing
-keys.
+keys.  Every merged value is a row with a numeric ``scaling_exponent``
+(docs_scaling.py renders them all as table rows).
 
 - ``viterbi_segment_pandas@32k``: the production-vocabulary unigram
   inference twin — a 32,768-piece broadcast table segmenting the
@@ -11,13 +12,9 @@ keys.
   histogram grows ~10x and the row measures the per-word scoring pass,
   exactly the regime where the create_map expression path stops
   existing.
-- ``hyperplane_lsh@tables=3``: the multi-table recall lever's cost —
-  the same embeddings corpus hashed by L=3 salted plane sets (3x
-  signature flops + union-of-candidates join + distinct) vs the L=1
-  row the catalog already measures.
 
-Run on an otherwise-idle box (same rule as bench.py); steal jiffies
-are recorded alongside.
+Run on an otherwise-idle box (same rule as bench.py); the steal
+jiffies over the run are printed alongside, not merged.
 """
 
 from __future__ import annotations
@@ -29,8 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from bench import _steal_jiffies as steal  # noqa: E402
 
@@ -62,23 +57,6 @@ def run_viterbi(spark, docs) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def run_lsh_tables(spark, embs, tables: int) -> float:
-    from data_engineering_individual_assignment_spark.operators.dedup import (
-        release_intermediates,
-    )
-    from data_engineering_individual_assignment_spark.operators.similarity import (
-        hyperplane_lsh_pairs,
-    )
-
-    t0 = time.perf_counter()
-    hyperplane_lsh_pairs(
-        embs, num_planes=12, threshold=0.95, num_tables=tables
-    ).write.format("noop").mode("overwrite").save()
-    dt = round(time.perf_counter() - t0, 3)
-    release_intermediates()
-    return dt
-
-
 def main() -> None:
     import math
     import tempfile
@@ -97,7 +75,7 @@ def main() -> None:
     dst = tempfile.mkdtemp(prefix="dei_extras_")
     report = {}
     try:
-        replicate(spark, src, dst, 10, ("documents", "embeddings"))
+        replicate(spark, src, dst, 10, ("documents",))
         docs_b = load_table(spark, src, "documents")
         docs_x = load_table(spark, dst, "documents")
         _ = run_viterbi(spark, docs_b)  # warm
@@ -111,27 +89,12 @@ def main() -> None:
             "dict segmenting the distinct word histogram (the create_map "
             "expression path is not constructible at this width)",
         }
-        embs_b = load_table(spark, src, "embeddings")
-        embs_x = load_table(spark, dst, "embeddings")
-        _ = run_lsh_tables(spark, embs_b, 3)  # warm
-        for tables in (1, 3):
-            base = run_lsh_tables(spark, embs_b, tables)
-            big = run_lsh_tables(spark, embs_x, tables)
-            report[f"hyperplane_lsh@tables={tables}"] = {
-                "sf0.1_sec": base,
-                "x10_sec": big,
-                "scaling_exponent": round(
-                    math.log(big / base) / math.log(10), 2
-                ),
-                "note": "multi-table recall lever cost leg (12 planes, "
-                f"L={tables}; L=1 is the pinned catalog config)",
-            }
     finally:
         import shutil
 
         shutil.rmtree(dst, ignore_errors=True)
-    report["_steal_delta_extras"] = (steal() or 0) - (s0 or 0)
     print(json.dumps(report, indent=2))
+    print("steal_delta_jiffies:", (steal() or 0) - (s0 or 0))
     out = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "SCALING_RUN.json"
     )

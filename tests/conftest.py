@@ -18,7 +18,7 @@ SF_ORACLE = os.environ.get("SPARK_TEST_SF_DIR", SF_SMALL)
 def spark():
     from data_engineering_individual_assignment_spark.session import get_spark
 
-    s = get_spark("dei-spark-tests", shuffle_partitions=8)
+    s = get_spark("dei-spark-tests")
     yield s
     s.stop()
 

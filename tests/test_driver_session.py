@@ -65,3 +65,44 @@ def test_local_cpus_defaults_to_affinity(monkeypatch, value):
     else:
         monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
     assert local_cpus() == len(os.sched_getaffinity(0))
+
+
+def test_query_run_keeps_the_session_shuffle_width(spark):
+    """The test session already has the shape ``tune_for_oracle`` sets,
+    so running a query through the driver contract changes nothing:
+    every Tier-1 test runs at one shuffle width, whatever ran first."""
+    import __spark_entry__ as entrymod
+
+    width = str(spark.sparkContext.defaultParallelism)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    try:
+        entrymod.queries()["pricing_summary"](spark, SF_SMALL)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_get_spark_applies_the_session_policy(spark):
+    """``get_spark`` on an existing session whose time zone and
+    adaptive broadcast threshold drifted hands it back with the policy
+    applied."""
+    from data_engineering_individual_assignment_spark.session import get_spark
+
+    drift = {
+        "spark.sql.session.timeZone": "America/New_York",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "1",
+    }
+    saved = {k: spark.conf.get(k) for k in drift}
+    for k, v in drift.items():
+        spark.conf.set(k, v)
+    try:
+        assert get_spark() is spark
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert spark.conf.get(
+            "spark.sql.adaptive.autoBroadcastJoinThreshold"
+        ) == str(64 * 1024 * 1024)
+        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -267,62 +267,6 @@ def test_embedding_near_dup_planted(spark):
     assert approx <= exact  # exact verification: no false positives
 
 
-def test_hyperplane_lsh_multi_table_recall(spark):
-    """The recall lever at capped signature width: with 16 planes a
-    cos~0.95 pair collides per table with p ~ 0.9^16 ~ 0.18, so a
-    single table MISSES most planted near-clones; salted tables
-    recover them (recall 1-(1-p)^L).  Table 0 reuses the original
-    salts, so the candidate set grows monotonically with L and every
-    pinned num_tables=1 result is unchanged.  Verification is exact,
-    so extra tables can never add a false positive."""
-    import random
-
-    from data_engineering_individual_assignment_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        hyperplane_lsh_pairs,
-    )
-
-    rng = random.Random(42)
-    dim, n = 16, 60
-    rows, planted = [], set()
-    for k in range(n):
-        base = [rng.gauss(0, 1) for _ in range(dim)]
-        norm = sum(v * v for v in base) ** 0.5
-        base = [v / norm for v in base]
-        # unit noise orthogonalized against base, scaled for cos ~ 0.95
-        noise = [rng.gauss(0, 1) for _ in range(dim)]
-        d = sum(a * b for a, b in zip(noise, base))
-        noise = [a - d * b for a, b in zip(noise, base)]
-        nn = sum(v * v for v in noise) ** 0.5
-        eps = (1 / 0.95**2 - 1) ** 0.5  # tan(theta) for cos 0.95
-        near = [b + eps * v / nn for b, v in zip(base, noise)]
-        rows += [(2 * k, base), (2 * k + 1, near)]
-        planted.add((2 * k, 2 * k + 1))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    got = {}
-    for tables in (1, 2, 3):
-        got[tables] = {
-            (r["id_a"], r["id_b"])
-            for r in hyperplane_lsh_pairs(
-                emb, num_planes=16, threshold=0.9, dim=dim,
-                num_tables=tables,
-            ).collect()
-        }
-    # monotone candidate growth (table 0 is the single-table plane set)
-    assert got[1] <= got[2] <= got[3]
-    # single-table misses recovered: recall strictly improves by L=3
-    r1, r3 = len(got[1] & planted), len(got[3] & planted)
-    assert r1 < len(planted)  # 16 planes DO miss cos~0.95 pairs
-    assert r3 > r1
-    # exact verification: nothing beyond the true >= 0.9 pair set
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_near_dup_pairs(emb, threshold=0.9).collect()
-    }
-    assert got[3] <= exact
-
-
 def test_embedding_near_dup_survives_count_pruning(spark):
     """count()/agg over the self-cogroup must work: with one shared
     projection feeding both cogroup sides, Catalyst's attribute dedup

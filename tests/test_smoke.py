@@ -53,6 +53,33 @@ def test_queries_md_matches_catalog():
         assert fh.read() == docs_queries.render()
 
 
+def test_scaling_run_rows_render():
+    """docs_scaling.py renders every SCALING_RUN.json value as a table
+    row, so each must be a row with numeric timings and a numeric
+    ``scaling_exponent``: a merged scalar, or the null exponent
+    scale_check.py writes for a failed query, crashes the render."""
+    import json
+    import os
+
+    import docs_scaling
+
+    with open(os.path.join(docs_scaling.HERE, "SCALING_RUN.json")) as fh:
+        run = json.load(fh)
+
+    def numeric(v):
+        return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+    bad = [
+        name
+        for name, row in run.items()
+        if not isinstance(row, dict)
+        or not all(
+            numeric(row.get(k)) for k in ("sf0.1_sec", "x10_sec", "scaling_exponent")
+        )
+    ]
+    assert not bad
+
+
 def test_load_table_schema_cache(spark):
     """The r12 schema cache: the second load of a path must take the
     explicit-schema fast path and produce an identical schema AND
@@ -84,7 +111,6 @@ def test_metadata_caches_are_session_scoped_and_invalidatable(spark, tmp_path):
     (b) a table rewritten in place gets its cached schema AND
     partition-count memo dropped by invalidate_table, so later probes
     re-infer from the new layout."""
-    from data_engineering_individual_assignment_spark.operators import dedup
     from data_engineering_individual_assignment_spark.sources import readers
 
     # ---- (b) rewrite invalidation: build a tiny 4-file table at dst,
@@ -100,9 +126,9 @@ def test_metadata_caches_are_session_scoped_and_invalidatable(spark, tmp_path):
     base.repartition(4).write.mode("overwrite").parquet(src)
     base.repartition(4).write.mode("overwrite").parquet(dst)
     df = readers.load_table(spark, dst_dir, "events")
-    dedup._scan_partitions(df)  # populates the nparts memo for dst
+    readers._scan_partitions(df)  # populates the nparts memo for dst
     assert dst in readers._per_session(readers._SCHEMA_CACHE, spark)
-    assert dst in dedup._NPARTS_CACHE.get(spark, {})
+    assert dst in readers._NPARTS_CACHE.get(spark, {})
     from data_engineering_individual_assignment_spark.sinks.maintenance import (
         compact_parquet,
     )
@@ -110,10 +136,10 @@ def test_metadata_caches_are_session_scoped_and_invalidatable(spark, tmp_path):
     compact_parquet(spark, src, dst, target_file_mb=1024)
     # both metadata entries for dst must be gone (stale layout dropped)
     assert dst not in readers._per_session(readers._SCHEMA_CACHE, spark)
-    assert dst not in dedup._NPARTS_CACHE.get(spark, {})
+    assert dst not in readers._NPARTS_CACHE.get(spark, {})
     df2 = readers.load_table(spark, dst_dir, "events")
     # re-probe matches a fresh uncached probe of the rewritten table
-    assert dedup._scan_partitions(df2) == df2.rdd.getNumPartitions()
+    assert readers._scan_partitions(df2) == df2.rdd.getNumPartitions()
     sf_dir = dst_dir  # for part (a) below
 
     # ---- (a) session scoping: a brand-new session object must not see
@@ -121,7 +147,7 @@ def test_metadata_caches_are_session_scoped_and_invalidatable(spark, tmp_path):
     new_session = spark.newSession()
     try:
         assert readers._SCHEMA_CACHE.get(new_session) in (None, {})
-        assert dedup._NPARTS_CACHE.get(new_session) in (None, {})
+        assert readers._NPARTS_CACHE.get(new_session) in (None, {})
         readers.load_table(new_session, sf_dir, "events")
         per_new = readers._per_session(readers._SCHEMA_CACHE, new_session)
         per_old = readers._per_session(readers._SCHEMA_CACHE, spark)
@@ -135,12 +161,12 @@ def test_scan_partitions_ignores_column_named_like_tag(spark):
     """ADVICE r12: a user DataFrame with a column literally named like
     the internal tag must fall back to the probe, not crash (getattr
     would resolve the name as a Column via DataFrame.__getattr__)."""
-    from data_engineering_individual_assignment_spark.operators import dedup
+    from data_engineering_individual_assignment_spark.sources import readers
 
     df = spark.range(0, 10).selectExpr(
         "id AS doc_id", "'x' AS _dei_nparts_path"
     )
-    n = dedup._scan_partitions(df)
+    n = readers._scan_partitions(df)
     assert isinstance(n, int) and n >= 1
 
 

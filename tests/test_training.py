@@ -1188,12 +1188,15 @@ def test_pq_frozen_agrees_with_pure_python_reference(spark):
             top = sorted(short, key=lambda ci: (-cos(qi, ci), ci))[:k]
             expect_rr[qi] = [(ci, rk + 1, cos(qi, ci)) for rk, ci in enumerate(top)]
 
-        codes_df = pq_encode(emb, books)
+        # checkpointed once per book set (both layouts): every top-k job
+        # below would otherwise replay the encode mapInPandas
+        codes_df = pq_encode(emb, books).localCheckpoint()
         assert {r.vec_id: list(r.codes) for r in codes_df.collect()} == cc
         # several partitions (the window merges local top-k lists) and
         # one (the local top-k itself must break the ties)
         for corpus, laid_out in (
-            (emb, codes_df), (emb.coalesce(1), codes_df.coalesce(1))
+            (emb, codes_df),
+            (emb.coalesce(1), codes_df.coalesce(1).localCheckpoint()),
         ):
             got = pq_topk(laid_out, queries, books, k=k)
             assert got.dtypes == adc_dtypes

@@ -1,10 +1,13 @@
 """Vector math over array<float|double> columns, used by the similarity
 search operators (SURVEY §2.11).
 
-Pure Column expressions via higher-order functions (zip_with/aggregate),
-evaluated JVM-side: no Python round-trip, linear scan, trivially
-distributable.  Sums are accumulated in double sequentially over the
+``dot`` / ``norm`` / ``cosine`` are pure Column expressions via
+higher-order functions (zip_with/aggregate), evaluated JVM-side: no
+Python round-trip, sums accumulated in double sequentially over the
 array, which keeps results deterministic for the oracle comparison.
+``cosine_pandas`` is the Arrow form: one numpy block computation per
+batch, for the pair-scoring hot paths (round its results before
+comparing).
 """
 
 from __future__ import annotations

@@ -1,11 +1,13 @@
 """Similarity search over embedding columns (SURVEY §2.11).
 
-- ``brute_force_topk``: exact cosine top-k.  The query set is broadcast
-  (it's small by construction); the corpus is scanned once; per-query
-  ranking is a window over (query, corpus) pairs.  At 100 TB of corpus
-  this is the correct *exact* plan: one scan, no corpus shuffle — the
-  join is broadcast, and TakeOrdered-style pruning happens in the rank
-  filter.
+- ``block_topk`` / ``quantized_topk`` / ``pq_topk`` / ``pq_topk_rerank``:
+  exact float cosine, int8 cosine, PQ asymmetric distance and the PQ
+  micro-int cosine rerank, all served by one scorer (``_scan_topk``).
+  The query set is collected once (it's small by construction); each
+  Arrow batch of the corpus is scored against it as one numpy matrix
+  and keeps a local top-k per query; one window ranks the survivors.
+  At 100 TB this is the correct plan: one corpus scan, no corpus
+  shuffle, and no |corpus| x |queries| pair relation.
 - ``ivf_topk``: IVF-style approximate search.  Vectors are assigned to
   their nearest centroid once (map pass over a broadcast centroid set);
   queries probe only ``nprobe`` cells.  Centroids here are a
@@ -18,11 +20,12 @@
   (expected L2-normalized) are micro-quantized in the JVM, so every
   distance after that is exact int64 and ties break on id.
 
-Vector math: the O(pairs) scoring steps use the Arrow-vectorized numpy
-cosine (functions/vectors.cosine_pandas — one block computation per
-batch); small cardinalities (centroid probes) keep the pure-expression
-form.  Results are rounded to 6 places before comparison, absorbing the
-~1e-15 fp difference between accumulation orders.
+Vector math: top-k scoring is numpy per Arrow batch (above); the
+pair-scoring steps of the near-dup and IVF operators use the
+Arrow-vectorized cosine (functions/vectors.cosine_pandas), and small
+cardinalities (centroid probes) keep the pure-expression form.  Float
+results are rounded to 6 places in the JVM before comparison, absorbing
+the ~1e-15 fp difference between accumulation orders.
 """
 
 from __future__ import annotations
@@ -33,36 +36,88 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine, cosine_pandas
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _scan_topk(
+    rows: DataFrame,
+    queries,
+    kernel,
+    k: int,
+    score: str,
+    score_type: str = "double",
+    ascending: bool = False,
+    rank_rounded: bool = False,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """The one top-k scorer behind every search below: one scan of
+    ``rows`` (``neighbor_id`` plus the columns the kernel reads), a
+    local top-k per query in each Arrow batch, and one window that ranks
+    the survivors.  The |rows| x |queries| pair relation never exists.
 
-    Returns (query_id, neighbor_id, rnk, cos_sim) with rnk 1..k; ties on
-    similarity break on neighbor_id ascending (deterministic).
-    Self-matches (same id) are excluded.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    ``queries`` is a (query id, query vector) frame, collected once on
+    the driver (small by contract: a query batch, not a table), or the
+    rows of one already collected.  An empty set returns the empty frame
+    of the output schema (query_id, neighbor_id, rnk, ``score``).
+    ``kernel(Q)`` runs once on the query matrix and returns the batch
+    scorer ``pdf -> (queries x rows) ndarray``; it travels in the
+    mapInPandas closure, so nothing outlives the query.
+
+    In each batch, self-matches are masked, and so are rows whose
+    ``query_id`` column (when ``rows`` has one) names another query.
+    Each query keeps its top-k in exact (score, neighbor_id) order: the
+    cut keeps every row tied with the k-th score before the lexsort, so
+    a tie across the boundary keeps its lowest ids.
+
+    Double scores are rounded to 6 dp in the JVM (HALF_UP, the oracle's
+    round; numpy's is half-to-even).  ``rank_rounded`` ranks on that
+    rounded value; a cut on the raw score could then drop a winner, so
+    every batch keeps every pair (use it on bounded ``rows`` only)."""
+    import numpy as np
+    import pandas as pd
+
+    q_rows = queries.collect() if isinstance(queries, DataFrame) else queries
+    if not q_rows:
+        return rows.sparkSession.createDataFrame(
+            [], f"query_id long, neighbor_id long, rnk int, {score} {score_type}"
+        )
+    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    score_batch = kernel(np.array([r[1] for r in q_rows]))
+    keep = None if rank_rounded else k
+
+    def local_topk(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            S = score_batch(pdf)
+            key = S if ascending else -S
+            ids = pdf["neighbor_id"].to_numpy()
+            valid = ids != q_ids[:, None]
+            if "query_id" in pdf:
+                valid &= pdf["query_id"].to_numpy() == q_ids[:, None]
+            qs, tops = [], []
+            for qi in range(len(q_ids)):
+                cand = np.flatnonzero(valid[qi])
+                if keep is not None and len(cand) > keep:
+                    cut = np.partition(key[qi, cand], keep - 1)[keep - 1]
+                    cand = cand[key[qi, cand] <= cut]
+                tops.append(cand[np.lexsort((ids[cand], key[qi, cand]))][:keep])
+                qs.append(np.full(len(tops[-1]), qi))
+            qi, top = np.concatenate(qs), np.concatenate(tops)
+            yield pd.DataFrame(
+                {"query_id": q_ids[qi], "neighbor_id": ids[top], score: S[qi, top]}
+            )
+
+    local = rows.mapInPandas(
+        local_topk, f"query_id long, neighbor_id long, {score} {score_type}"
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", cosine_pandas("q_vec", "c_vec"))
-    )
+    out = F.round(score, 6) if score_type == "double" else F.col(score)
+    if rank_rounded:
+        local, out = local.withColumn(score, out), F.col(score)
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+        F.col(score).asc() if ascending else F.col(score).desc(),
+        F.col("neighbor_id").asc(),
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
+        local.withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos_sim", 6).alias("cos_sim"))
+        .select("query_id", "neighbor_id", "rnk", out.alias(score))
     )
 
 
@@ -73,76 +128,31 @@ def block_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k via PER-PARTITION BLOCK scoring — the same
-    semantics as ``brute_force_topk`` (ties on neighbor_id ascending,
-    self-matches excluded) under the physical strategy that scales:
+    """Exact top-k cosine neighbors for each query vector.
 
-    - the query set is collected once (small by contract — a query
-      batch, not a table) and broadcast as one float64 matrix;
-    - each corpus partition computes Q @ C.T as a single BLAS gemm in
-      mapInPandas and keeps only its local top-k per query, so the
-      Arrow boundary moves |corpus| rows in and q*k rows OUT per
-      partition — no |corpus| x |queries| pair relation ever exists
-      (brute_force_topk shuffles exactly that);
-    - a final window over the q * k * n_partitions candidates (tiny)
-      picks the global top-k.
-
-    At 100 TB: one corpus scan, zero corpus shuffle, candidate reduce
-    bounded by partitions — the standard exact-kNN fan-in design.
-    """
+    Returns (query_id, neighbor_id, rnk, cos_sim) with rnk 1..k; ties on
+    similarity break on neighbor_id ascending; self-matches (same id)
+    are excluded.  Each Arrow batch of the corpus is L2-normalized and
+    scored against the whole query set as one float64 gemm
+    (``_scan_topk``).  At 100 TB: one corpus scan, zero corpus shuffle,
+    a candidate reduce bounded by q * k * batches rows — the standard
+    exact-kNN fan-in design."""
     import numpy as np
-    import pandas as pd
 
-    spark = corpus.sparkSession
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).collect()
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rnk int, cos_sim double"
-        )
-    q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    bc = spark.sparkContext.broadcast((q_ids, Qn))
+    def unit(X):
+        X = X.astype(np.float64)
+        return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
 
-    def score_block(batches):
-        ids, Qm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = np.stack(pdf["c_vec"].to_numpy()).astype(np.float64)
-            Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-            sims = Qm @ Cn.T  # (q, rows) one gemm per Arrow batch
-            cids = pdf["neighbor_id"].to_numpy()
-            take = min(len(cids), k + 1)  # +1 absorbs a self-match
-            for qi in range(len(ids)):
-                s = sims[qi]
-                # partial top-take, then deterministic (-sim, id) order
-                cand = np.argpartition(-s, take - 1)[:take] if len(s) > take else np.arange(len(s))
-                order = cand[np.lexsort((cids[cand], -s[cand]))]
-                keep = order[cids[order] != ids[qi]][:k]
-                yield pd.DataFrame(
-                    {
-                        "query_id": ids[qi],
-                        "neighbor_id": cids[keep],
-                        "cos_sim": s[keep],
-                    }
-                )
+    def float_cosine(Q):
+        Qn = unit(Q)
+        return lambda pdf: Qn @ unit(np.stack(pdf["c_vec"].to_numpy())).T
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    local = c.mapInPandas(
-        score_block, "query_id long, neighbor_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos_sim", 6).alias("cos_sim"))
+    return _scan_topk(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        queries.select(id_col, vec_col),
+        float_cosine,
+        k,
+        "cos_sim",
     )
 
 
@@ -164,23 +174,18 @@ def quantize_int8(
     dot products are exact (no accumulation-order fp drift).
     """
     v = F.col(vec_col).cast("array<double>")
-    max_abs = F.greatest(
-        F.array_max(F.transform(v, lambda x: F.abs(x))), F.lit(1e-300)
-    )
-    scale = F.lit(127.0) / max_abs
+
+    # max|x| is the fold's accumulator, so the finish lambda sees it as a
+    # lambda variable: computed once per vector.  As a column referenced
+    # inside transform's lambda, Catalyst inlines it back and recomputes
+    # max|x| for every element (64 x 64 interpreted ops per vector).
+    def codes(max_abs):
+        scale = F.lit(127.0) / F.greatest(max_abs, F.lit(1e-300))
+        return F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
+
     return df.withColumn(
-        out_col, F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
-    )
-
-
-def _int_dot(a, b):
-    """Exact integer dot product of two long arrays (JVM zip_with +
-    aggregate, no UDF; both are CodegenFallback, so it runs
-    interpreted)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+        out_col,
+        F.aggregate(v, F.lit(0.0), lambda m, x: F.greatest(m, F.abs(x)), codes),
     )
 
 
@@ -191,39 +196,36 @@ def quantized_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k cosine over int8-quantized vectors: same plan
-    shape as ``brute_force_topk`` (broadcast query set, one corpus scan,
-    per-query window rank) but the similarity is computed on the int8
-    codes with EXACT integer arithmetic — dot and norms are integer
-    aggregates, so q_cos is bit-identical across engines and the whole
-    path is oracle-checkable (unlike float ANN, which needs rounding
-    slack).  Recall vs the exact float path is pinned in tests."""
-    q = quantize_int8(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "qv",
-        "q_q",
-    ).withColumn("q_norm", _int_dot(F.col("q_q"), F.col("q_q")))
-    c = quantize_int8(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv",
-        "c_q",
-    ).withColumn("c_norm", _int_dot(F.col("c_q"), F.col("c_q")))
-    scored = c.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).withColumn(
+    """Approximate top-k cosine over int8-quantized vectors: the codes
+    come from ``quantize_int8`` in the JVM, and each Arrow batch scores
+    them in exact int64 numpy (``_scan_topk``).  Dot and norms are
+    integers, so q_cos = dot / sqrt(double(max(qn * cn, 1))) is
+    bit-identical across engines and the whole path is oracle-checkable
+    (unlike float ANN, which needs rounding slack).  Returns (query_id,
+    neighbor_id, rnk, q_cos), self-matches excluded, ties on
+    neighbor_id ascending.  Recall vs the exact float path is pinned in
+    tests."""
+    import numpy as np
+
+    def int8_cosine(Q):
+        qn = (Q * Q).sum(axis=1)
+
+        def score(pdf):
+            C = np.vstack(pdf["c_q"].to_numpy())
+            den = np.maximum(qn[:, None] * (C * C).sum(axis=1), 1)
+            return (Q @ C.T) / np.sqrt(den.astype(np.float64))
+
+        return score
+
+    def codes(df: DataFrame, out_col: str) -> DataFrame:
+        return quantize_int8(df.select(id_col, vec_col), vec_col, out_col)
+
+    return _scan_topk(
+        codes(corpus, "c_q").select(F.col(id_col).alias("neighbor_id"), "c_q"),
+        codes(queries, "q_q").select(id_col, "q_q"),
+        int8_cosine,
+        k,
         "q_cos",
-        _int_dot(F.col("q_q"), F.col("c_q"))
-        / F.sqrt(
-            F.greatest(F.col("q_norm") * F.col("c_norm"), F.lit(1)).cast("double")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("q_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("q_cos", 6).alias("q_cos"))
     )
 
 
@@ -738,7 +740,7 @@ def ivf_topk(
     (``use_kmeans=True`` — real cells via ``lloyd_centroids``, whose
     rounded-mean recurrence is engine-portable and oracle-checkable).
 
-    Recall < 1 by design; pair with ``brute_force_topk`` to measure it.
+    Recall < 1 by design; pair with ``block_topk`` to measure it.
     """
     if use_kmeans:
         centroids = lloyd_centroids(corpus, num_cells, 3, id_col, vec_col)
@@ -911,6 +913,27 @@ def pq_encode(
     ).mapInPandas(enc, schema="vec_id long, codes array<int>")
 
 
+def _adc_kernel(codebooks):
+    """ADC scorer for ``_scan_topk``: the queries' micro vectors build
+    T[q, j, c] = ||q_j - C[j][c]||^2 once in exact int64, and a batch's
+    distances are m table lookups summed over its byte codes."""
+    import numpy as np
+
+    B = np.asarray(codebooks, dtype="int64")
+    m, _, sub = B.shape
+
+    def kernel(Q):
+        T = ((Q.reshape(len(Q), m, 1, sub) - B) ** 2).sum(axis=3)
+
+        def score(pdf):
+            C = np.vstack(pdf["codes"].to_numpy())
+            return sum(T[:, j, C[:, j]] for j in range(m))
+
+        return score
+
+    return kernel
+
+
 def pq_topk(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -926,56 +949,15 @@ def pq_topk(
     Input vectors are expected to be L2-normalized.
 
     Returns (query_id, neighbor_id, rnk, adc_dist_sq_micro), self-matches
-    excluded, ties on neighbor_id ascending.  The query set is collected
-    once (small by contract); each Arrow batch emits only its LOCAL
-    top-k per query, chosen by a stable (distance, id) lexsort — a
-    partial sort would break exact ties arbitrarily — and one window
-    ranks the survivors.  The pair relation is never materialized."""
-    import numpy as np
-    import pandas as pd
-
-    B = np.asarray(codebooks, dtype="int64")
-    m, _, sub = B.shape
-    q_rows = queries.select(id_col, _vec_micro(F.col(vec_col))).collect()
-    if not q_rows:
-        return codes_df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rnk int, adc_dist_sq_micro long"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype="int64")
-    Q = np.array([r[1] for r in q_rows], dtype="int64").reshape(len(q_ids), m, 1, sub)
-    T = ((Q - B) ** 2).sum(axis=3)  # T[q, j, c] = ||q_j - C[j][c]||^2
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = np.vstack(pdf["codes"].to_numpy())
-            ids = pdf["vec_id"].to_numpy()
-            D = sum(T[:, j, C[:, j]] for j in range(m))  # (queries, rows)
-            qs, tops = [], []
-            for qi, qid in enumerate(q_ids):
-                cand = np.flatnonzero(ids != qid)
-                tops.append(cand[np.lexsort((ids[cand], D[qi, cand]))[:k]])
-                qs.append(np.full(len(tops[-1]), qi))
-            qi, top = np.concatenate(qs), np.concatenate(tops)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qi],
-                    "neighbor_id": ids[top],
-                    "adc_dist_sq_micro": D[qi, top],
-                }
-            )
-
-    local = codes_df.select("vec_id", "codes").mapInPandas(
-        score, schema="query_id long, neighbor_id long, adc_dist_sq_micro long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist_sq_micro").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "adc_dist_sq_micro")
+    excluded, ties on neighbor_id ascending, scored by ``_scan_topk``."""
+    return _scan_topk(
+        codes_df.select(F.col("vec_id").alias("neighbor_id"), "codes"),
+        queries.select(id_col, _vec_micro(F.col(vec_col))),
+        _adc_kernel(codebooks),
+        k,
+        "adc_dist_sq_micro",
+        "long",
+        ascending=True,
     )
 
 
@@ -993,37 +975,41 @@ def pq_topk_rerank(
     shortlists ``shortlist`` candidates per query from the byte codes,
     then ONLY those rows are re-scored with exact cosine over the
     micro-quantized vectors.  Input vectors are expected to be
-    L2-normalized.  The cosine is int64 dot products in the JVM, so the
-    ratio and its 6-dp round start from identical integers in any
-    engine.  The candidate list broadcasts into the corpus scan:
-    float-width payloads never shuffle, and the exact pass touches
-    |queries| * shortlist vectors regardless of corpus size."""
-    cand = pq_topk(
-        codes_df, queries, codebooks, k=shortlist, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id")
-    qvq = queries.select(
-        F.col(id_col).alias("query_id"),
-        _vec_micro(F.col(vec_col)).alias("qvq"),
+    L2-normalized.
+
+    The candidate list broadcasts into the corpus scan before
+    ``_vec_micro``, so the quantization and the int64 dot products touch
+    |queries| * shortlist rows regardless of corpus size, and
+    float-width payloads never shuffle.  The cosine starts from
+    identical integers in any engine; it is rounded to 6 dp and then
+    ranked, ties on neighbor_id ascending."""
+    import numpy as np
+
+    q_rows = queries.select(id_col, _vec_micro(F.col(vec_col))).collect()
+    cand = _scan_topk(
+        codes_df.select(F.col("vec_id").alias("neighbor_id"), "codes"),
+        q_rows,
+        _adc_kernel(codebooks),
+        shortlist,
+        "adc_dist_sq_micro",
+        "long",
+        ascending=True,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vec_micro(F.col(vec_col)).alias("cvq"),
+    rows = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v"))
+        .join(F.broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
+        .select("neighbor_id", "query_id", _vec_micro(F.col("v")).alias("cvq"))
     )
-    dot = _int_dot(F.col("qvq"), F.col("cvq"))
-    den = F.sqrt(_int_dot(F.col("qvq"), F.col("qvq")).cast("double")) * F.sqrt(
-        _int_dot(F.col("cvq"), F.col("cvq")).cast("double")
-    )
-    cos = F.when(den > 0, dot.cast("double") / den).otherwise(F.lit(0.0))
-    scored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qvq), "query_id")
-        .withColumn("cos_sim", F.round(cos, 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "cos_sim")
-    )
+
+    def micro_cosine(Q):
+        qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
+
+        def score(pdf):
+            C = np.vstack(pdf["cvq"].to_numpy())
+            den = qn[:, None] * np.sqrt((C * C).sum(axis=1).astype(np.float64))
+            dot = (Q @ C.T).astype(np.float64)
+            return np.divide(dot, den, out=np.zeros(den.shape), where=den > 0)
+
+        return score
+
+    return _scan_topk(rows, q_rows, micro_cosine, k, "cos_sim", rank_rounded=True)

@@ -457,8 +457,7 @@ def simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Similarity search
 # --------------------------------------------------------------------------
-# shared by ann_brute_force and ann_block_topk: both are EXACT top-5
-# cosine search — same answer, different physical strategy
+# exact top-5 cosine search; ann_block_topk is a registered alias
 _ANN_ORACLE_SQL = """
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v
                FROM embeddings WHERE vec_id < 10),
@@ -482,30 +481,28 @@ _ANN_ORACLE_SQL = """
 @register(
     "ann_brute_force",
     sql=_ANN_ORACLE_SQL,
-    doc="exact cosine top-5 for the 10 lowest-id query vectors: broadcast "
-    "query set, single corpus scan, per-query window rank. The exact-ANN "
-    "baseline; ann_ivf is the approximate scale path.",
+    doc="exact cosine top-5 for the 10 lowest-id query vectors: the query "
+    "set is collected once, each corpus Arrow batch is scored as one "
+    "gemm and keeps a local top-5 per query, and one window ranks the "
+    "survivors (operators/similarity.block_topk) - one corpus scan, no "
+    "corpus shuffle, no |corpus| x |queries| pair relation. The "
+    "exact-ANN baseline; ann_ivf is the approximate scale path.",
 )
 def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk(emb, queries, k=5).orderBy("query_id", "rnk")
+    return similarity.block_topk(emb, queries, k=5).orderBy("query_id", "rnk")
 
 
 @register(
     "ann_block_topk",
     sql=_ANN_ORACLE_SQL,
-    doc="exact cosine top-5 via per-partition BLOCK scoring (mapInPandas "
-    "gemm over each corpus partition, local top-k, tiny global reduce): "
-    "the same answer as ann_brute_force with no |corpus| x |queries| "
-    "pair relation — one corpus scan, zero corpus shuffle, the physical "
-    "strategy that survives a 100 TB corpus. Same oracle as "
-    "ann_brute_force (both exact).",
+    doc="the same query as ann_brute_force (exact cosine top-5 served by "
+    "operators/similarity.block_topk's per-batch local top-k), kept "
+    "registered under its earlier name.",
 )
 def ann_block_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return similarity.block_topk(emb, queries, k=5).orderBy("query_id", "rnk")
+    return ann_brute_force(spark, sf_dir)
 
 
 def _cos_sql(a: str, b: str) -> str:

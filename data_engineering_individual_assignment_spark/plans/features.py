@@ -135,15 +135,15 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="kNN label propagation (weak supervision / auto-labeling): "
     "5-nearest-neighbor majority vote over held-out vectors (vec_id >= "
-    "20) predicts each query vector's label. One broadcast-queries "
-    "corpus scan (reuses brute_force_topk), then a per-query majority "
-    "window; ties break on the smaller label.",
+    "20) predicts each query vector's label. One corpus scan with a "
+    "per-batch local top-5 (operators/similarity.block_topk), then a "
+    "per-query majority window; ties break on the smaller label.",
 )
 def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") >= 20)
     queries = emb.filter(F.col("vec_id") < 20)
-    topk = similarity.brute_force_topk(corpus, queries, k=5)
+    topk = similarity.block_topk(corpus, queries, k=5)
     labels = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label")
     )

@@ -351,9 +351,10 @@ _Q_SQL = """
     "memory-bound scale path — 8x smaller corpus residency than "
     "float64 and EXACT integer dot products, which is why this "
     "approximate method is fully oracle-checkable while float ANN "
-    "needs rounding slack.  Same broadcast-queries/one-corpus-scan "
-    "plan as ann_brute_force; recall vs the exact float path is "
-    "pinned in tests.  operators/similarity.py:quantize_int8.",
+    "needs rounding slack.  The codes are made in the JVM; each corpus "
+    "Arrow batch scores them in int64 numpy and keeps a local top-5 per "
+    "query, the plan of ann_brute_force; recall vs the exact float path "
+    "is pinned in tests.  operators/similarity.py:quantized_topk.",
 )
 def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1166,7 +1167,8 @@ _RM_COS = (
     ORDER BY query_id
     """,
     doc="retrieval evaluation harness: exact cosine top-5 per query "
-    "(ann_brute_force's run), graded against label relevance "
+    "(ann_brute_force's run: a per-batch local top-5 over one corpus "
+    "scan, no pair relation), graded against label relevance "
     "(neighbor relevant iff it shares the query's label) as recall@5, "
     "MRR, and nDCG@5 with the standard min(k, n_rel) ideal-DCG "
     "normalizer.  The metric relations are per-query aggregates over "
@@ -1177,7 +1179,7 @@ _RM_COS = (
 def retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    run = similarity.brute_force_topk(emb, queries, k=5)
+    run = similarity.block_topk(emb, queries, k=5)
     labels = emb.select("vec_id", "label")
     top5 = (
         run.join(

@@ -75,13 +75,13 @@ def test_ols_single_row(spark):
 
 def test_topk_with_fewer_rows_than_k(spark):
     from data_engineering_individual_assignment_spark.operators.similarity import (
-        brute_force_topk,
+        block_topk,
     )
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(3)], "vec_id long, embedding array<double>"
     )
-    out = brute_force_topk(emb, emb.filter(F.col("vec_id") == 0), k=10).collect()
+    out = block_topk(emb, emb.filter(F.col("vec_id") == 0), k=10).collect()
     assert len(out) == 2  # corpus minus self, fewer than k — no padding
 
 

@@ -1,11 +1,12 @@
 """Operator-level unit tests: planted near-duplicates for dedup, the two
 as-of join implementations agreeing, OLS matching numpy's closed form,
-IVF recall vs brute force."""
+IVF recall vs the exact top-k."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -158,8 +159,6 @@ def test_asof_never_picks_future_order(spark):
 # Regression: closed form matches numpy
 # --------------------------------------------------------------------------
 def test_ols_matches_numpy(spark):
-    import numpy as np
-
     from data_engineering_individual_assignment_spark.operators.regression import (
         ols_fit,
     )
@@ -177,8 +176,6 @@ def test_ols_matches_numpy(spark):
 
 def test_fit_per_group_runs(spark):
     """Closed-form per-group OLS agrees with a per-group numpy.polyfit."""
-    import numpy as np
-
     from data_engineering_individual_assignment_spark.operators.regression import (
         fit_per_group,
     )
@@ -198,11 +195,11 @@ def test_fit_per_group_runs(spark):
 
 
 # --------------------------------------------------------------------------
-# Similarity: IVF recall vs brute force
+# Similarity: IVF recall vs the exact top-k
 # --------------------------------------------------------------------------
 def test_ivf_recall(spark):
     from data_engineering_individual_assignment_spark.operators.similarity import (
-        brute_force_topk,
+        block_topk,
         ivf_topk,
     )
     from data_engineering_individual_assignment_spark.sources.readers import load_table
@@ -210,7 +207,7 @@ def test_ivf_recall(spark):
     emb = load_table(spark, SF_SMALL, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     exact = {(r["query_id"], r["neighbor_id"]) for r in
-             brute_force_topk(emb, q, k=5).collect()}
+             block_topk(emb, q, k=5).collect()}
     approx = {(r["query_id"], r["neighbor_id"]) for r in
               ivf_topk(emb, q, num_cells=8, nprobe=2, k=5).collect()}
     recall = len(exact & approx) / len(exact)
@@ -218,21 +215,69 @@ def test_ivf_recall(spark):
     assert len(approx) == len(exact)  # same shape: 5 per query
 
 
+def _numpy_topk(rows, qids, k):
+    """Pure-numpy exact cosine top-k over the full (query x corpus)
+    matrix: rank by (-cosine, neighbor_id), self-matches excluded."""
+    ids = np.array([i for i, _ in rows])
+    X = np.array([v for _, v in rows], dtype=np.float64)
+    cos = X @ X.T / np.outer(np.linalg.norm(X, axis=1), np.linalg.norm(X, axis=1))
+    out = []
+    for qid in qids:
+        qi = int(np.flatnonzero(ids == qid)[0])
+        order = [j for j in np.lexsort((ids, -cos[qi])) if ids[j] != qid][:k]
+        out += [(qid, int(ids[j]), rk + 1, cos[qi, j]) for rk, j in enumerate(order)]
+    return out
+
+
+def _assert_topk_equal(got, want):
+    got = sorted(tuple(r) for r in got)
+    assert [r[:3] for r in got] == sorted(r[:3] for r in want)
+    np.testing.assert_allclose(
+        [r[3] for r in got], [r[3] for r in sorted(want)], atol=1e-6
+    )
+
+
 def test_block_topk_equals_brute_force(spark):
-    """The per-partition block strategy is the same EXACT operator as
-    the pair-join strategy: identical (query, neighbor, rank, sim) rows,
-    including the neighbor-id tie-break and self-match exclusion."""
+    """block_topk is the exact operator: the same (query, neighbor,
+    rank, sim) rows as a brute-force full-matrix numpy ranking, including the
+    neighbor-id tie-break and self-match exclusion, across 7 blocks."""
     from data_engineering_individual_assignment_spark.operators.similarity import (
         block_topk,
-        brute_force_topk,
     )
     from data_engineering_individual_assignment_spark.sources.readers import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings").repartition(7)  # force >1 block
     q = emb.filter(F.col("vec_id") < 10)
-    a = sorted(tuple(r) for r in brute_force_topk(emb, q, k=5).collect())
-    b = sorted(tuple(r) for r in block_topk(emb, q, k=5).collect())
-    assert a == b
+    rows = [(r["vec_id"], list(r["embedding"])) for r in emb.collect()]
+    _assert_topk_equal(block_topk(emb, q, k=5).collect(), _numpy_topk(rows, range(10), 5))
+
+
+def test_block_topk_keeps_lowest_ids_of_a_tie_across_k(spark):
+    """Eight exact copies of the best neighbor tie across k=5: the top-k
+    must be their five lowest ids, on 7 partitions (the window merges
+    local lists) and on 1 (the local cut itself must keep them).  A
+    partial sort that cuts at k+1 rows keeps an arbitrary subset of the
+    tied rows."""
+    import random
+
+    from data_engineering_individual_assignment_spark.operators.similarity import (
+        block_topk,
+    )
+
+    rng = random.Random(5)
+    ids = rng.sample(range(1, 400), 120)
+    tied = set(ids[:8])
+    rows = [(0, [1.0, 1.0, 0.0, 0.0]), (400, [0.0, 1.0, 0.0, 0.0])] + [
+        (i, [1.0, 0.0, 0.0, 0.0] if i in tied else [0.0, 0.0, rng.random(), 1.0])
+        for i in ids
+    ]
+    rng.shuffle(rows)
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = _numpy_topk(rows, [0, 400], 5)
+    assert {r[1] for r in want if r[0] == 0} == set(sorted(tied)[:5])
+    for laid_out in (emb.repartition(7), emb.coalesce(1)):
+        q = laid_out.filter(F.col("vec_id").isin(0, 400))
+        _assert_topk_equal(block_topk(laid_out, q, k=5).collect(), want)
 
 
 # --------------------------------------------------------------------------
@@ -307,7 +352,7 @@ def test_choose_bands_theory():
 def test_ivf_kmeans_recall_at_least_default(spark):
     """KMeans cells should not be worse than the lowest-id-centroid stub."""
     from data_engineering_individual_assignment_spark.operators.similarity import (
-        brute_force_topk,
+        block_topk,
         ivf_topk,
     )
     from data_engineering_individual_assignment_spark.sources.readers import load_table
@@ -315,7 +360,7 @@ def test_ivf_kmeans_recall_at_least_default(spark):
     emb = load_table(spark, SF_SMALL, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     exact = {(r["query_id"], r["neighbor_id"]) for r in
-             brute_force_topk(emb, q, k=5).collect()}
+             block_topk(emb, q, k=5).collect()}
     km = {(r["query_id"], r["neighbor_id"]) for r in
           ivf_topk(emb, q, num_cells=8, nprobe=2, k=5, use_kmeans=True).collect()}
     recall = len(exact & km) / len(exact)
@@ -326,7 +371,7 @@ def test_ivf_kmeans_recall_at_least_default(spark):
     # ordering (both partitions are balanced: top-2 cells hold 28% vs
     # 40% of the corpus).
     assert recall >= 0.4, f"kmeans IVF recall collapsed: {recall}"
-    # the real invariant: probing EVERY cell must equal brute force
+    # the real invariant: probing EVERY cell must equal the exact top-k
     full = {(r["query_id"], r["neighbor_id"]) for r in
             ivf_topk(emb, q, num_cells=8, nprobe=8, k=5, use_kmeans=True).collect()}
     assert full == exact

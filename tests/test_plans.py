@@ -4,6 +4,8 @@ broadcast, or turns top-k into a global sort, these fail."""
 
 from __future__ import annotations
 
+import pytest
+
 from .conftest import SF_SMALL
 
 
@@ -280,13 +282,25 @@ def test_tokenizer_fertility_scan_prunes(spark):
 
 
 def test_retrieval_metrics_broadcasts_queries_and_labels(spark):
-    """The run side (corpus x 10 queries) and the grading joins must all
-    broadcast the tiny side - no SortMergeJoin anywhere."""
+    """The grading joins against the run (query labels, neighbor
+    labels) must broadcast the tiny side - no SortMergeJoin anywhere."""
     plan = _final(_plan(spark, "retrieval_metrics", execute=True))
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") + plan.count(
-        "BroadcastNestedLoopJoin"
-    ) >= 2
+    for key in ("query_id", "neighbor_id"):
+        assert f"BroadcastHashJoin [{key}#" in plan, key
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["ann_brute_force", "ann_int8_topk", "knn_label_vote", "retrieval_metrics", "ann_pq_rerank"],
+)
+def test_topk_plans_build_no_pair_relation(spark, name):
+    """Top-k search scores each corpus batch against the collected query
+    set: no |corpus| x |queries| pair relation, so neither a
+    BroadcastNestedLoopJoin nor a CartesianProduct in the plan."""
+    plan = _final(_plan(spark, name, execute=True))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_semdedup_no_cartesian_and_bounded_window_join(spark):

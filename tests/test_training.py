@@ -116,7 +116,7 @@ def test_ann_int8_recall_vs_exact(spark):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.brute_force_topk(emb, queries, k=5).collect()
+        for r in similarity.block_topk(emb, queries, k=5).collect()
     }
     quant = {
         (r.query_id, r.neighbor_id)
